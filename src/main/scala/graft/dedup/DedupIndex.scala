@@ -1,9 +1,9 @@
 package graft.dedup
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming maintenance of the dedup indexes (SURVEY §2 round 11).
   *
@@ -127,13 +127,9 @@ object DedupIndex {
     * shape with the dedup indexes as the sink. */
   def maintain(docStream: DataFrame, root: String, checkpoint: String,
       n: Int = 3, numHashes: Int = 32, bands: Int = 8): StreamingQuery =
-    docStream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        updateWithBatch(batch.toDF(), id, root, n, numHashes, bands)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    graft.river.StreamingRiver.sink(docStream, checkpoint) { (batch, id) =>
+      updateWithBatch(batch, id, root, n, numHashes, bands)
+    }
 
   /** `Dedup.incrementalNgramJaccard` with the hot set read FROM the
     * maintained df table (which must already include the delta batch's

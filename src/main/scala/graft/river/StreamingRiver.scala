@@ -19,43 +19,23 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object StreamingRiver {
 
-  /** Merge one (micro-)batch into the parquet index, last write wins.
-    * Crash-safe swap: the new snapshot is fully written to a staging
-    * dir, the old index is renamed aside (never deleted while it is the
-    * only copy), the staging becomes the index, then the old copy is
-    * dropped — at every instant either the index or its `__old` backup
-    * exists, and a restarted batch re-merges from whichever survived. */
   /** customMapping analogue: conform every batch to the declared sink
     * schema (project + cast) before merging, so the index's schema is
-    * the declared one — not whatever the source scan inferred. */
-  private def conform(rawBatch: DataFrame, cfg: RiverConfig): DataFrame =
+    * the declared one — not whatever the source scan inferred. `flag`
+    * (the CDC delete column) is kept even when the DDL omits it. */
+  private def conform(rawBatch: DataFrame, cfg: RiverConfig,
+      flag: Option[String] = None): DataFrame =
     cfg.sinkSchemaDdl match {
       case Some(ddl) =>
         val schema = org.apache.spark.sql.types.StructType.fromDDL(ddl)
-        rawBatch.select(schema.fields.toSeq.map(f => col(f.name).cast(f.dataType)): _*)
+        rawBatch.select(schema.fields.toSeq.map(f => col(f.name).cast(f.dataType)) ++
+          flag.filterNot(schema.fieldNames.contains).map(col): _*)
       case None => rawBatch
     }
 
-  def upsertBatch(rawBatch: DataFrame, cfg: RiverConfig, seqCol: String): Unit = {
-    val batch = conform(rawBatch, cfg)
-    val spark = batch.sparkSession
-    val index = new org.apache.hadoop.fs.Path(cfg.sinkPath)
-    val fs = index.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new org.apache.hadoop.fs.Path(cfg.sinkPath + "__staging")
-    val old = new org.apache.hadoop.fs.Path(cfg.sinkPath + "__old")
-    // recover: a crash after the rename-aside leaves only __old
-    if (!fs.exists(index) && fs.exists(old)) fs.rename(old, index)
-    val merged =
-      if (fs.exists(index))
-        River.latestPerKey(spark.read.parquet(cfg.sinkPath).unionByName(batch),
-          cfg.keyCol, cfg.tsCol, seqCol)
-      else River.latestPerKey(batch, cfg.keyCol, cfg.tsCol, seqCol)
-    merged.write.mode("overwrite").parquet(staging.toString)
-    fs.delete(old, true)
-    if (fs.exists(index)) fs.rename(index, old)
-    fs.rename(staging, index)
-    fs.delete(old, true)
-  }
+  /** Merge one (micro-)batch into the parquet index, last write wins. */
+  def upsertBatch(rawBatch: DataFrame, cfg: RiverConfig, seqCol: String): Unit =
+    mergeSnapshot(conform(rawBatch, cfg), cfg, seqCol)
 
   /** CDC upsert with DELETE tombstones — the streaming twin of the
     * reference's delete-old step (HBaseRiver.java:176-180 removes
@@ -69,16 +49,28 @@ object StreamingRiver {
     * at merge would let a late-arriving older record resurrect a
     * deleted key. Readers go through [[liveIndex]] (filters the flag);
     * compacting tombstones older than the late-data horizon is the
-    * maintenance step, exactly like any watermark. Same staging +
-    * rename-aside crash discipline as [[upsertBatch]]. */
+    * maintenance step, exactly like any watermark. Same declared-schema
+    * conform and crash discipline as [[upsertBatch]]. */
   def upsertBatchWithDeletes(batch: DataFrame, cfg: RiverConfig,
       seqCol: String, deleteCol: String): Unit = {
     require(batch.columns.contains(deleteCol), s"batch lacks $deleteCol")
+    mergeSnapshot(conform(batch, cfg, Some(deleteCol)), cfg, seqCol)
+  }
+
+  /** One `latestPerKey` pass over `existing ∪ batch` into the snapshot
+    * index. Crash-safe swap: the new snapshot is fully written to a
+    * staging dir, the old index is renamed aside (never deleted while it
+    * is the only copy), the staging becomes the index, then the old copy
+    * is dropped — at every instant either the index or its `__old`
+    * backup exists, and a restarted batch re-merges from whichever
+    * survived. */
+  private def mergeSnapshot(batch: DataFrame, cfg: RiverConfig, seqCol: String): Unit = {
     val spark = batch.sparkSession
     val index = new org.apache.hadoop.fs.Path(cfg.sinkPath)
     val fs = index.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val staging = new org.apache.hadoop.fs.Path(cfg.sinkPath + "__staging")
     val old = new org.apache.hadoop.fs.Path(cfg.sinkPath + "__old")
+    // recover: a crash after the rename-aside leaves only __old
     if (!fs.exists(index) && fs.exists(old)) fs.rename(old, index)
     val merged =
       if (fs.exists(index))
@@ -105,14 +97,9 @@ object StreamingRiver {
   def runWithDeletes(changes: DataFrame, cfg: RiverConfig,
       checkpointDir: String, seqCol: String = "event_id",
       deleteCol: String = "deleted"): StreamingQuery =
-    changes.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        upsertBatchWithDeletes(batch, cfg, seqCol, deleteCol)
-      }
-      .start()
+    sink(changes, checkpointDir) { (batch, _) =>
+      upsertBatchWithDeletes(batch, cfg, seqCol, deleteCol)
+    }
 
   /** Partition-pruned upsert: the index is hash-partitioned on the key
     * (`kbucket=pmod(hash(key), nBuckets)` directories) and a micro-batch
@@ -131,7 +118,8 @@ object StreamingRiver {
     *
     * Scale: `touched` is bounded by nBuckets (driver-side metadata, not
     * data); the existing-side read prunes partitions via the kbucket
-    * filter; the merge shuffles only touched-bucket rows. */
+    * filter; the merge shuffles only touched-bucket rows; bucket state
+    * comes from one directory listing, not per-bucket `exists` probes. */
   def upsertBatchPartitioned(rawBatch: DataFrame, cfg: RiverConfig,
       seqCol: String, nBuckets: Int = 32): Unit = {
     require(nBuckets > 0)
@@ -141,19 +129,24 @@ object StreamingRiver {
     val fs = index.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def live(b: Int) = new org.apache.hadoop.fs.Path(s"${cfg.sinkPath}/kbucket=$b")
     def bak(b: Int) = new org.apache.hadoop.fs.Path(s"${cfg.sinkPath}/.kbucket_old_$b")
-    // recover any bucket a crash left renamed-aside
-    if (fs.exists(index)) (0 until nBuckets).foreach { b =>
-      if (!fs.exists(live(b)) && fs.exists(bak(b))) fs.rename(bak(b), live(b))
+    def names(dir: org.apache.hadoop.fs.Path): Set[String] =
+      try fs.listStatus(dir).map(_.getPath.getName).toSet
+      catch { case _: java.io.FileNotFoundException => Set.empty }
+    val listed = names(index)
+    // recover buckets a crash left renamed-aside; a backup beside its
+    // live bucket is the leftover of a finished swap
+    (0 until nBuckets).filter(b => listed(s".kbucket_old_$b")).foreach { b =>
+      if (listed(s"kbucket=$b")) fs.delete(bak(b), true) else fs.rename(bak(b), live(b))
     }
+    val liveBuckets = (0 until nBuckets).filter(b =>
+      listed(s"kbucket=$b") || listed(s".kbucket_old_$b")).toSet
     val bucketed = batch.withColumn("kbucket",
       pmod(hash(col(cfg.keyCol)), lit(nBuckets)))
     val touched = bucketed.select("kbucket").distinct()
       .collect().map(_.getInt(0)).sorted
     if (touched.isEmpty) return
-    val hasIndex = fs.exists(index) &&
-      (0 until nBuckets).exists(b => fs.exists(live(b)))
     val merged =
-      if (hasIndex) {
+      if (liveBuckets.nonEmpty) {
         // kbucket is a partition column → this filter prunes directories:
         // untouched buckets are never opened
         val existingTouched = spark.read.parquet(cfg.sinkPath)
@@ -165,16 +158,33 @@ object StreamingRiver {
     fs.delete(staging, true)
     merged.write.partitionBy("kbucket").mode("overwrite").parquet(staging.toString)
     fs.mkdirs(index)
-    touched.foreach { b =>
-      val stagedBucket = new org.apache.hadoop.fs.Path(s"$staging/kbucket=$b")
-      if (fs.exists(stagedBucket)) {
-        fs.delete(bak(b), true)
-        if (fs.exists(live(b))) fs.rename(live(b), bak(b))
-        fs.rename(stagedBucket, live(b))
-        fs.delete(bak(b), true)
-      }
+    val staged = names(staging)
+    touched.filter(b => staged(s"kbucket=$b")).foreach { b =>
+      if (liveBuckets(b)) fs.rename(live(b), bak(b))
+      fs.rename(new org.apache.hadoop.fs.Path(s"$staging/kbucket=$b"), live(b))
+      fs.delete(bak(b), true)
     }
     fs.delete(staging, true)
+  }
+
+  /** The library's one `foreachBatch` wiring: an AvailableNow query
+    * over `stream`, checkpointed at `checkpointDir`, handing `f` each
+    * micro-batch and its id — re-homed, zero-copy, into the session that
+    * built the stream. Each query runs in a cloned session whose new
+    * artifact state gives executors a new classloader, and Spark's
+    * codegen cache is keyed by classloader, so without the re-home
+    * every poll recompiles the same classes. Batch contents and
+    * checkpoint semantics are unchanged; there is no switch for it. */
+  def sink(stream: DataFrame, checkpointDir: String)(
+      f: (DataFrame, Long) => Unit): StreamingQuery = {
+    val home = stream.sparkSession
+    stream.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (batch: DataFrame, id: Long) =>
+        f(org.apache.spark.sql.graftglue.Glue.rehome(home, batch), id)
+      }
+      .start()
   }
 
   /** The streaming import: events stream → normalize/project → upsert
@@ -190,15 +200,10 @@ object StreamingRiver {
         projected.select((cfg.keyCol +: cfg.tsCol +: cfg.qualifiers)
           .distinct.map(col): _*)
       else projected
-    selected.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (sinkBuckets > 0) upsertBatchPartitioned(batch, cfg, seqCol, sinkBuckets)
-        else upsertBatch(batch, cfg, seqCol)
-      }
-      .start()
+    sink(selected, checkpointDir) { (batch, _) =>
+      if (sinkBuckets > 0) upsertBatchPartitioned(batch, cfg, seqCol, sinkBuckets)
+      else upsertBatch(batch, cfg, seqCol)
+    }
   }
 
   /** Streaming tumbling-window aggregation with a watermark — the

@@ -1,9 +1,9 @@
 package graft.similarity
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.functions.GraftFunctions
 
@@ -321,18 +321,13 @@ object AnnIndex {
   def maintain(embStream: DataFrame, root: String, checkpoint: String,
       nCentroids: Int = 16, lloydRounds: Int = 3,
       retrainEvery: Int = 0, pqM: Int = 0, pqKs: Int = 16): StreamingQuery =
-    embStream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        val needTrain = centroidVersions(batch.sparkSession, root).isEmpty ||
-          (retrainEvery > 0 && id > 0 && id % retrainEvery == 0)
-        if (needTrain)
-          trainCentroids(batch.toDF(), id, root, nCentroids, lloydRounds,
-            pqM, pqKs)
-        appendBatch(batch.toDF(), id, root)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    graft.river.StreamingRiver.sink(embStream, checkpoint) { (batch, id) =>
+      val needTrain = centroidVersions(batch.sparkSession, root).isEmpty ||
+        (retrainEvery > 0 && id > 0 && id % retrainEvery == 0)
+      if (needTrain)
+        trainCentroids(batch, id, root, nCentroids, lloydRounds, pqM, pqKs)
+      appendBatch(batch, id, root)
+    }
 
   /** IVF top-k READING the maintained index: probe list selection
     * happens against the persisted centroid matrix, candidates come

@@ -1,9 +1,9 @@
 package graft.text
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming maintenance of the SUGGESTER VOCABULARY index — the table
   * ES builds at index time (its completion suggester's FST) and this
@@ -96,13 +96,9 @@ object TermsIndex {
     * with the suggester index as the sink. */
   def maintain(docStream: DataFrame, root: String,
       checkpoint: String): StreamingQuery =
-    docStream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        updateWithBatch(batch.toDF(), id, root)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    graft.river.StreamingRiver.sink(docStream, checkpoint) { (batch, id) =>
+      updateWithBatch(batch, id, root)
+    }
 
   /** [[TextOps.completionSuggest]] served FROM the maintained index:
     * prefix filter + bounded TakeOrdered over the vocab table — the

@@ -1,6 +1,6 @@
 package org.apache.spark.sql.graftglue
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
@@ -21,4 +21,10 @@ object Glue {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "scala_udf")
+
+  /** `batch` as a DataFrame of `home`, zero-copy (its planned
+    * `InternalRow` RDD, no external `Row`s): jobs over it run in `home`. */
+  def rehome(home: SparkSession, batch: DataFrame): DataFrame =
+    home.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .internalCreateDataFrame(batch.queryExecution.toRdd, batch.schema, false)
 }

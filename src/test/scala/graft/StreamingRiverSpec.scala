@@ -149,6 +149,77 @@ class StreamingRiverSpec extends SparkSpec {
     assert(batch.nonEmpty)
   }
 
+  test("partitioned upsert restores and merges buckets a crash left renamed aside") {
+    import org.apache.hadoop.fs.Path
+    val sink = tmp("river7-sink") + "/index"
+    val nBuckets = 8
+    val events = Tables.events(spark, sfDir).cache()
+    val cfg = RiverConfig(sourcePath = "n/a", sinkPath = sink, keyCol = "user_id")
+    StreamingRiver.upsertBatchPartitioned(events, cfg, "event_id", nBuckets)
+
+    val spark2 = spark; import spark2.implicits._
+    val bucketOf = events
+      .select(col("user_id"), pmod(hash(col("user_id")), lit(nBuckets)))
+      .distinct().as[(Long, Int)].collect().toMap
+    val buckets = bucketOf.values.toSeq.distinct.sorted
+    assert(buckets.size >= 2)
+    val (hit, miss) = (buckets(0), buckets(1))
+    val hitKeys = bucketOf.collect { case (k, b) if b == hit => k }.toSeq.sorted
+    assert(hitKeys.nonEmpty)
+    // a crash after the rename-aside: both buckets survive only as backups
+    val fs = new Path(sink).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Seq(hit, miss).foreach { b =>
+      assert(fs.rename(new Path(s"$sink/kbucket=$b"), new Path(s"$sink/.kbucket_old_$b")))
+    }
+
+    // the next poll updates one key of `hit` and does not touch `miss`
+    val batch2 = events.filter(col("user_id") === hitKeys.head)
+      .withColumn("value", col("value") + 1000.0)
+      .withColumn("ts", (col("ts").cast("long") + 1000000000L).cast(events.schema("ts").dataType))
+    StreamingRiver.upsertBatchPartitioned(batch2, cfg, "event_id", nBuckets)
+
+    val left = fs.listStatus(new Path(sink)).map(_.getPath.getName).toSet
+    assert(left.contains(s"kbucket=$hit") && left.contains(s"kbucket=$miss"))
+    assert(!left.exists(_.startsWith(".kbucket_old_")), s"backups left behind: $left")
+    val got = spark.read.parquet(sink)
+      .select("user_id", "event_id", "value").collect()
+      .map(r => r.getLong(0) -> (r.getLong(1), math.round(r.getDouble(2) * 100))).toMap
+    val expect = River.latestPerKey(
+        events.unionByName(batch2), "user_id", "ts", "event_id")
+      .select("user_id", "event_id", "value").collect()
+      .map(r => r.getLong(0) -> (r.getLong(1), math.round(r.getDouble(2) * 100))).toMap
+    assert(got == expect)
+    assert(got(hitKeys.head)._2 > 100000)
+  }
+
+  test("repeat river polls compile no generated code") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val landing = tmp("river8-src")
+    val sink = tmp("river8-sink") + "/index"
+    val ckpt = tmp("river8-ckpt")
+    val events = Tables.events(spark, sfDir).cache()
+    val cfg = RiverConfig(sourcePath = landing, sinkPath = sink, keyCol = "user_id")
+    val compiledPerPoll = (0 until 3).map { i =>
+      // each poll picks up one newly landed file past the checkpoint
+      events.filter(col("event_id") % 3 === i).coalesce(1)
+        .write.mode("append").parquet(landing)
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      StreamingRiver.run(spark.readStream.schema(events.schema).parquet(landing),
+        cfg, ckpt, sinkBuckets = 8).awaitTermination()
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    assert(compiledPerPoll(2) == 0, s"classes compiled per poll: $compiledPerPoll")
+
+    val streamed = spark.read.parquet(sink)
+      .select("user_id", "event_id").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val batch = River.latestPerKey(events, "user_id", "ts", "event_id")
+      .select("user_id", "event_id").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(streamed == batch)
+    assert(batch.nonEmpty)
+  }
+
   test("stateful latest-per-key (mapGroupsWithState) matches the batch operator") {
     val events = Tables.events(spark, sfDir).cache()
     val src = tmp("river4-src")
@@ -241,5 +312,29 @@ class StreamingRiverSpec extends SparkSpec {
     // the tombstones genuinely delete some keys at this SF
     val allKeys = River.latestPerKey(changes, "user_id", "ts", "event_id").count()
     assert(streamedLive.size < allKeys)
+  }
+
+  test("CDC upsert enforces the declared sink schema and keeps the delete flag") {
+    import org.apache.spark.sql.types.{BooleanType, StructType}
+    val sink = tmp("cdc-ddl-sink") + "/index"
+    val ddl = "user_id BIGINT, ts TIMESTAMP, event_id BIGINT, value DECIMAL(12,2)"
+    val cfg = RiverConfig(sourcePath = "unused", sinkPath = sink, keyCol = "user_id",
+      sinkSchemaDdl = Some(ddl))
+    val changes = Tables.events(spark, sfDir)
+      .withColumn("deleted", col("event_id") % 7 === 0)
+    StreamingRiver.upsertBatchWithDeletes(changes, cfg, "event_id", "deleted")
+
+    val idx = spark.read.parquet(sink)
+    val declared = StructType.fromDDL(ddl).add("deleted", BooleanType)
+    assert(idx.schema.map(f => f.name -> f.dataType) ==
+      declared.map(f => f.name -> f.dataType), s"index schema: ${idx.schema.simpleString}")
+    val live = StreamingRiver.liveIndex(spark, cfg, "deleted")
+      .select("user_id", "event_id").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val replay = River.latestPerKey(changes, "user_id", "ts", "event_id")
+      .filter(!col("deleted"))
+      .select("user_id", "event_id").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(live == replay)
   }
 }
