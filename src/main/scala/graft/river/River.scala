@@ -88,9 +88,14 @@ object River {
 
   /** Upsert view: last write wins per key, the semantics of indexing by
     * `_id` (HBaseParser.java:145-159). One hash shuffle on the key; ties on
-    * the timestamp are broken by `seqCol` so the result is deterministic. */
-  def latestPerKey(df: DataFrame, keyCol: String, tsCol: String, seqCol: String): DataFrame = {
-    val w = Window.partitionBy(col(keyCol)).orderBy(col(tsCol).desc, col(seqCol).desc)
+    * the timestamp are broken by `seqCol` so the result is deterministic.
+    * `within` adds window-partition columns after the key; each must be a
+    * function of the key (the winners stay the same), and a `df` already
+    * partitioned by one of them keeps its partitioning (no extra shuffle). */
+  def latestPerKey(df: DataFrame, keyCol: String, tsCol: String, seqCol: String,
+      within: Seq[Column] = Nil): DataFrame = {
+    val w = Window.partitionBy(col(keyCol) +: within: _*)
+      .orderBy(col(tsCol).desc, col(seqCol).desc)
     df.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
   }
 

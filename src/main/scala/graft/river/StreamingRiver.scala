@@ -1,8 +1,15 @@
 package graft.river
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.Try
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 /** Structured Streaming form of the river (SURVEY §2 group 1): the
   * reference's poll loop (`HBaseParser.run:50` — scan past the
@@ -66,15 +73,15 @@ object StreamingRiver {
     * survived. */
   private def mergeSnapshot(batch: DataFrame, cfg: RiverConfig, seqCol: String): Unit = {
     val spark = batch.sparkSession
-    val index = new org.apache.hadoop.fs.Path(cfg.sinkPath)
+    val index = new Path(cfg.sinkPath)
     val fs = index.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new org.apache.hadoop.fs.Path(cfg.sinkPath + "__staging")
-    val old = new org.apache.hadoop.fs.Path(cfg.sinkPath + "__old")
+    val staging = new Path(cfg.sinkPath + "__staging")
+    val old = new Path(cfg.sinkPath + "__old")
     // recover: a crash after the rename-aside leaves only __old
     if (!fs.exists(index) && fs.exists(old)) fs.rename(old, index)
     val merged =
       if (fs.exists(index))
-        River.latestPerKey(spark.read.parquet(cfg.sinkPath).unionByName(batch),
+        River.latestPerKey(readIndex(spark, index, index).unionByName(batch),
           cfg.keyCol, cfg.tsCol, seqCol)
       else River.latestPerKey(batch, cfg.keyCol, cfg.tsCol, seqCol)
     merged.write.mode("overwrite").parquet(staging.toString)
@@ -82,6 +89,25 @@ object StreamingRiver {
     if (fs.exists(index)) fs.rename(index, old)
     fs.rename(staging, index)
     fs.delete(old, true)
+  }
+
+  /** The parquet index at `root`, read with the Spark schema in the
+    * footer of one parquet file of `sampleDir` (read on the driver) plus
+    * the index's `partition` columns. With `mergeSchema` off, that is the
+    * schema `spark.read.parquet` would infer from one footer, without the
+    * inference job; with no footer to read it falls back to that path. */
+  private def readIndex(spark: SparkSession, root: Path, sampleDir: Path,
+      partition: Seq[StructField] = Nil): DataFrame = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    Try {
+      val sample = sampleDir.getFileSystem(conf).listStatus(sampleDir).map(_.getPath)
+        .filter(_.getName.endsWith(".parquet")).minBy(_.getName)
+      val rd = ParquetFileReader.open(HadoopInputFile.fromPath(sample, conf))
+      val footer = try DataType.fromJson(rd.getFooter.getFileMetaData.getKeyValueMetaData
+        .get(ParquetReadSupport.SPARK_METADATA_KEY)).asInstanceOf[StructType]
+      finally rd.close()
+      spark.read.schema(StructType(footer.fields ++ partition)).parquet(root.toString)
+    }.getOrElse(spark.read.parquet(root.toString))
   }
 
   /** The live view of a tombstone-carrying index: rows whose delete
@@ -110,6 +136,25 @@ object StreamingRiver {
     * not opened, not read, not rewritten — byte-identical after the
     * batch.
     *
+    * The bucket count is part of the layout: a key's bucket moves when
+    * it changes, and the stale copy in its old bucket would never be
+    * read or removed. An empty `_kbuckets_<n>` file at the index root
+    * records it, and a poll with any other count fails before it writes
+    * anything. An index without the file passes if no bucket it holds is
+    * out of range and every key of its highest bucket hashes to that
+    * bucket at this count (one extra job, on that poll only), and then
+    * gets one.
+    *
+    * Three jobs per poll: the touched bucket ids (no shuffle), the merge
+    * shuffle and the rewrite. The merge runs on `parts =
+    * min(nBuckets, defaultParallelism)` tasks, bucket `b` on task
+    * `b mod parts`, so each touched bucket is written as one file (AQE
+    * does not coalesce a shuffle with an explicit partition count). The
+    * bucket is thus the unit of write parallelism: the merge keeps every
+    * core busy only when the poll touches at least as many buckets as
+    * there are cores, and a backfill into fewer buckets than cores is
+    * slower than a key-hash shuffle.
+    *
     * Crash-safe per-bucket swap: merged buckets are fully written to a
     * staging dir first, then each touched bucket is renamed aside (to a
     * dot-prefixed name Spark readers ignore) and replaced; at every
@@ -125,14 +170,22 @@ object StreamingRiver {
     require(nBuckets > 0)
     val batch = conform(rawBatch, cfg)
     val spark = batch.sparkSession
-    val index = new org.apache.hadoop.fs.Path(cfg.sinkPath)
+    val index = new Path(cfg.sinkPath)
     val fs = index.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def live(b: Int) = new org.apache.hadoop.fs.Path(s"${cfg.sinkPath}/kbucket=$b")
-    def bak(b: Int) = new org.apache.hadoop.fs.Path(s"${cfg.sinkPath}/.kbucket_old_$b")
-    def names(dir: org.apache.hadoop.fs.Path): Set[String] =
+    def live(b: Int) = new Path(s"${cfg.sinkPath}/kbucket=$b")
+    def bak(b: Int) = new Path(s"${cfg.sinkPath}/.kbucket_old_$b")
+    def names(dir: Path): Set[String] =
       try fs.listStatus(dir).map(_.getPath.getName).toSet
       catch { case _: java.io.FileNotFoundException => Set.empty }
     val listed = names(index)
+    val marker = s"_kbuckets_$nBuckets"
+    val counts = listed.collect { case BucketCount(n) => n.toInt }
+    require(counts.forall(_ == nBuckets),
+      s"index ${cfg.sinkPath} has ${counts.toSeq.sorted.mkString(", ")} buckets but this " +
+        s"poll uses $nBuckets; a key's bucket depends on the count")
+    val stray = listed.collect { case BucketDir(b) if b.toInt >= nBuckets => b.toInt }
+    require(stray.isEmpty, s"index ${cfg.sinkPath} holds bucket ${stray.max}, " +
+      s"so it has more than the $nBuckets buckets of this poll")
     // recover buckets a crash left renamed-aside; a backup beside its
     // live bucket is the leftover of a finished swap
     (0 until nBuckets).filter(b => listed(s".kbucket_old_$b")).foreach { b =>
@@ -140,32 +193,52 @@ object StreamingRiver {
     }
     val liveBuckets = (0 until nBuckets).filter(b =>
       listed(s"kbucket=$b") || listed(s".kbucket_old_$b")).toSet
+    if (counts.isEmpty && liveBuckets.nonEmpty) {
+      val b = liveBuckets.max
+      require(readIndex(spark, live(b), live(b))
+        .filter(pmod(hash(col(cfg.keyCol)), lit(nBuckets)) =!= b).isEmpty,
+        s"index ${cfg.sinkPath} has no _kbuckets_<n> file and its bucket $b holds keys " +
+          s"of other buckets at $nBuckets; it was written with another bucket count")
+    }
     val bucketed = batch.withColumn("kbucket",
       pmod(hash(col(cfg.keyCol)), lit(nBuckets)))
-    val touched = bucketed.select("kbucket").distinct()
-      .collect().map(_.getInt(0)).sorted
+    val touched = bucketed.select("kbucket").as(Encoders.scalaInt)
+      .mapPartitions(_.toSet.iterator)(Encoders.scalaInt)
+      .collect().distinct.sorted
     if (touched.isEmpty) return
-    val merged =
-      if (liveBuckets.nonEmpty) {
+    val both =
+      if (liveBuckets.isEmpty) bucketed
+      else {
+        // sample the footer of a bucket this poll reads, if it reads any
+        val sample = touched.find(liveBuckets).getOrElse(liveBuckets.min)
         // kbucket is a partition column → this filter prunes directories:
         // untouched buckets are never opened
-        val existingTouched = spark.read.parquet(cfg.sinkPath)
+        readIndex(spark, index, live(sample), Seq(bucketed.schema("kbucket")))
           .filter(col("kbucket").isin(touched.map(Integer.valueOf).toSeq: _*))
-        River.latestPerKey(existingTouched.unionByName(bucketed),
-          cfg.keyCol, cfg.tsCol, seqCol)
-      } else River.latestPerKey(bucketed, cfg.keyCol, cfg.tsCol, seqCol)
-    val staging = new org.apache.hadoop.fs.Path(cfg.sinkPath + "__staging")
+          .unionByName(bucketed)
+      }
+    // the window keeps the shuffle's partitioning: its extra columns are
+    // functions of the key, so the winners are the same
+    val parts = math.min(nBuckets, spark.sparkContext.defaultParallelism)
+    val task = pmod(col("kbucket"), lit(parts))
+    val merged = River.latestPerKey(both.repartitionById(parts, task),
+      cfg.keyCol, cfg.tsCol, seqCol, within = Seq(col("kbucket"), task))
+    val staging = new Path(cfg.sinkPath + "__staging")
     fs.delete(staging, true)
     merged.write.partitionBy("kbucket").mode("overwrite").parquet(staging.toString)
     fs.mkdirs(index)
+    if (!listed(marker)) fs.create(new Path(index, marker)).close()
     val staged = names(staging)
     touched.filter(b => staged(s"kbucket=$b")).foreach { b =>
       if (liveBuckets(b)) fs.rename(live(b), bak(b))
-      fs.rename(new org.apache.hadoop.fs.Path(s"$staging/kbucket=$b"), live(b))
+      fs.rename(new Path(s"$staging/kbucket=$b"), live(b))
       fs.delete(bak(b), true)
     }
     fs.delete(staging, true)
   }
+
+  private val BucketCount = "_kbuckets_(\\d+)".r
+  private val BucketDir = "\\.?kbucket(?:=|_old_)(\\d+)".r
 
   /** The library's one `foreachBatch` wiring: an AvailableNow query
     * over `stream`, checkpointed at `checkpointDir`, handing `f` each

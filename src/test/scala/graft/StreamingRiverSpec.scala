@@ -1,7 +1,15 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.{AnalysisException, DataFrame}
+import org.apache.spark.sql.execution.SparkPlanInfo
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.functions._
 import graft.river.{River, RiverConfig, StreamingRiver}
 
@@ -218,6 +226,174 @@ class StreamingRiverSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(streamed == batch)
     assert(batch.nonEmpty)
+  }
+
+  /** Jobs started by `body`, and the last physical plan Spark reported
+    * for each SQL execution it ran. The listener bus is asynchronous, so
+    * a marker job on each side of `body` is the handshake: once the
+    * listener has seen a marker job start, every earlier event has been
+    * delivered to it. */
+  private def observe(body: => Unit): (Int, Seq[SparkPlanInfo]) = {
+    val sc = spark.sparkContext
+    val marker = "graft.spec.handshake"
+    val jobs = new AtomicInteger
+    val plans = new ConcurrentHashMap[Long, SparkPlanInfo]
+    val (started, ended) = (new CountDownLatch(1), new CountDownLatch(1))
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(marker))) match {
+          case Some("start") => started.countDown()
+          case Some(_) => ended.countDown()
+          case None => if (started.getCount == 0) jobs.incrementAndGet(): Unit
+        }
+      override def onOtherEvent(e: SparkListenerEvent): Unit =
+        if (started.getCount == 0) e match {
+          case s: SparkListenerSQLExecutionStart => plans.put(s.executionId, s.sparkPlanInfo)
+          case u: SparkListenerSQLAdaptiveExecutionUpdate => plans.put(u.executionId, u.sparkPlanInfo)
+          case _ =>
+        }
+    }
+    def handshake(phase: String, seen: CountDownLatch): Unit = {
+      sc.setLocalProperty(marker, phase)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(marker, null)
+      assert(seen.await(60, TimeUnit.SECONDS), s"listener missed the $phase marker")
+    }
+    sc.addSparkListener(listener)
+    try {
+      handshake("start", started)
+      body
+      handshake("end", ended)
+    } finally sc.removeSparkListener(listener)
+    (jobs.get, plans.values.asScala.toSeq)
+  }
+
+  private def nodes(p: SparkPlanInfo): Seq[SparkPlanInfo] = p +: p.children.flatMap(nodes)
+
+  /** An index of every event in `nBuckets` buckets, and a poll updating
+    * three of its keys (newer ts, value + 1000). */
+  private def bucketedIndex(prefix: String, nBuckets: Int): (RiverConfig, DataFrame, DataFrame) = {
+    val sink = tmp(prefix) + "/index"
+    val events = Tables.events(spark, sfDir)
+    val cfg = RiverConfig(sourcePath = "n/a", sinkPath = sink, keyCol = "user_id")
+    StreamingRiver.upsertBatchPartitioned(events, cfg, "event_id", nBuckets)
+    val keys = events.select("user_id").distinct().orderBy("user_id").limit(3)
+      .collect().map(_.getLong(0))
+    val poll = events.filter(col("user_id").isin(keys.map(Long.box).toSeq: _*))
+      .withColumn("value", col("value") + 1000.0)
+      .withColumn("ts", (col("ts").cast("long") + 1000000000L).cast(events.schema("ts").dataType))
+    (cfg, events, poll)
+  }
+
+  /** Every file under `dir`, hidden ones included: relative path → md5. */
+  private def fileBytes(dir: String): Map[String, String] = {
+    val root = java.nio.file.Paths.get(dir)
+    val walk = Files.walk(root)
+    try walk.iterator().asScala.filter(Files.isRegularFile(_)).map { f =>
+      root.relativize(f).toString -> java.security.MessageDigest.getInstance("MD5")
+        .digest(Files.readAllBytes(f)).map("%02x".format(_)).mkString
+    }.toMap finally walk.close()
+  }
+
+  test("a partitioned poll onto a non-empty index runs 3 jobs") {
+    val (cfg, _, poll) = bucketedIndex("river9-sink", 8)
+    val (jobs, _) = observe(StreamingRiver.upsertBatchPartitioned(poll, cfg, "event_id", 8))
+    assert(jobs == 3, s"jobs per poll: $jobs")
+  }
+
+  test("a partitioned poll shuffles once, bucket-aligned, on min(nBuckets, cores) partitions") {
+    val (cfg, _, poll) = bucketedIndex("river10-sink", 8)
+    val (_, plans) = observe(StreamingRiver.upsertBatchPartitioned(poll, cfg, "event_id", 8))
+    val exchanges = plans.flatMap(nodes).filter(_.nodeName == "Exchange").map(_.simpleString)
+    val parts = math.min(8, spark.sparkContext.defaultParallelism)
+    assert(exchanges.size == 1, s"exchanges: $exchanges")
+    assert(exchanges.head.startsWith("Exchange shufflepartitionidpassthrough(") &&
+      exchanges.head.contains(s"), $parts), "), exchanges.head)
+  }
+
+  test("a partitioned poll writes one file per touched bucket") {
+    // without AQE every shuffle runs at the shuffle-partition setting
+    val conf = spark.conf
+    val saved = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+      .map(k => k -> conf.get(k))
+    conf.set("spark.sql.adaptive.enabled", "false")
+    conf.set("spark.sql.shuffle.partitions", "5")
+    try onePerBucket() finally saved.foreach { case (k, v) => conf.set(k, v) }
+  }
+
+  private def onePerBucket(): Unit = {
+    val nBuckets = 7
+    val (cfg, events, poll) = bucketedIndex("river11-sink", nBuckets)
+    def filesPerBucket(): Map[Int, Int] =
+      new java.io.File(cfg.sinkPath).listFiles().filter(_.getName.startsWith("kbucket="))
+        .map(d => d.getName.stripPrefix("kbucket=").toInt ->
+          d.listFiles().count(_.getName.endsWith(".parquet"))).toMap
+    val full = filesPerBucket()
+    assert(full.size > 1 && full.values.forall(_ == 1), full)
+    val before = fileBytes(cfg.sinkPath)
+    StreamingRiver.upsertBatchPartitioned(poll, cfg, "event_id", nBuckets)
+    val changed = fileBytes(cfg.sinkPath).keySet.diff(before.keySet)
+      .map(p => "kbucket=(\\d+)".r.findFirstMatchIn(p).get.group(1).toInt)
+    assert(changed.nonEmpty)
+    val after = filesPerBucket()
+    assert(changed.forall(after(_) == 1), after)
+    val got = spark.read.parquet(cfg.sinkPath).select("user_id", "event_id").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val expect = River.latestPerKey(events.unionByName(poll), "user_id", "ts", "event_id")
+      .select("user_id", "event_id").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == expect)
+  }
+
+  test("a poll onto an index whose files carry an extra column fails and writes nothing") {
+    val sink = tmp("river12-sink") + "/index"
+    val events = Tables.events(spark, sfDir)
+    val cfg = RiverConfig(sourcePath = "n/a", sinkPath = sink, keyCol = "user_id")
+    StreamingRiver.upsertBatchPartitioned(events.withColumn("extra", lit(1)), cfg, "event_id", 8)
+    val before = fileBytes(sink)
+    val e = intercept[AnalysisException] {
+      StreamingRiver.upsertBatchPartitioned(events.limit(50), cfg, "event_id", 8)
+    }
+    assert(e.getMessage.contains("Cannot resolve column name \"extra\""), e.getMessage)
+    assert(fileBytes(sink) == before)
+  }
+
+  test("a partitioned poll with another bucket count fails before it writes anything") {
+    val (cfg, events, poll) = bucketedIndex("river13-sink", 8)
+    val marker = new java.io.File(cfg.sinkPath, "_kbuckets_8")
+    assert(marker.isFile && marker.length == 0)
+    val before = fileBytes(cfg.sinkPath)
+    for (n <- Seq(4, 16)) {
+      val e = intercept[IllegalArgumentException] {
+        StreamingRiver.upsertBatchPartitioned(poll, cfg, "event_id", n)
+      }
+      assert(e.getMessage.contains("has 8 buckets") && e.getMessage.contains(s"uses $n"),
+        e.getMessage)
+      assert(fileBytes(cfg.sinkPath) == before, s"poll at $n changed the index")
+    }
+    // an index written before the marker: checked by its bucket directories
+    assert(marker.delete())
+    val legacy = fileBytes(cfg.sinkPath)
+    val e = intercept[IllegalArgumentException] {
+      StreamingRiver.upsertBatchPartitioned(poll, cfg, "event_id", 4)
+    }
+    assert(e.getMessage.contains("more than the 4 buckets"), e.getMessage)
+    assert(fileBytes(cfg.sinkPath) == legacy)
+    StreamingRiver.upsertBatchPartitioned(poll, cfg, "event_id", 8)
+    assert(marker.isFile)
+    // a marker-less index at 4 buckets has no bucket >= 8, but its keys
+    // sit in the wrong buckets for 8
+    val (cfg4, _, poll4) = bucketedIndex("river14-sink", 4)
+    assert(new java.io.File(cfg4.sinkPath, "_kbuckets_4").delete())
+    val legacy4 = fileBytes(cfg4.sinkPath)
+    val e4 = intercept[IllegalArgumentException] {
+      StreamingRiver.upsertBatchPartitioned(poll4, cfg4, "event_id", 8)
+    }
+    assert(e4.getMessage.contains("written with another bucket count"), e4.getMessage)
+    assert(fileBytes(cfg4.sinkPath) == legacy4)
+    val got = spark.read.parquet(cfg.sinkPath).select("user_id", "event_id").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val expect = River.latestPerKey(events.unionByName(poll), "user_id", "ts", "event_id")
+      .select("user_id", "event_id").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == expect)
   }
 
   test("stateful latest-per-key (mapGroupsWithState) matches the batch operator") {
