@@ -1,9 +1,10 @@
 package graft.dedup
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+
+import graft.river.IndexCommit
 
 /** Streaming maintenance of the dedup indexes (SURVEY §2 round 11).
   *
@@ -43,19 +44,9 @@ object DedupIndex {
   private def dfDir(root: String) = s"$root/shingle_df"
   private def bandsDir(root: String) = s"$root/minhash_bands"
 
-  private def hadoopFs(spark: SparkSession, path: String) =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   /** Complete (committed) df snapshot versions, ascending. */
-  def dfVersions(spark: SparkSession, root: String): Seq[Long] = {
-    val fs = hadoopFs(spark, dfDir(root))
-    val base = new Path(dfDir(root))
-    if (!fs.exists(base)) Seq.empty
-    else fs.listStatus(base).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("v="))
-      .filter(s => fs.exists(new Path(s.getPath, "_SUCCESS")))
-      .map(_.getPath.getName.stripPrefix("v=").toLong).sorted
-  }
+  def dfVersions(spark: SparkSession, root: String): Seq[Long] =
+    IndexCommit.versions(spark, dfDir(root))
 
   /** The maintained (shingle, df) table — newest complete snapshot. */
   def shingleDfTable(spark: SparkSession, root: String): DataFrame = {
@@ -107,17 +98,9 @@ object DedupIndex {
           case None => batchCounts
         }
         merged.write.mode("overwrite").parquet(s"${dfDir(root)}/v=$batchId")
-        // Retire superseded snapshots, but keep a grace window of the
-        // `retainSnapshots` newest besides the one just committed: a
-        // concurrent reader that resolved an older version via
-        // dfVersions but hasn't executed its lazy DataFrame yet would
-        // otherwise hit FileNotFound mid-query. With the window, the
-        // "readers take the newest complete version" guarantee holds as
-        // long as no query outlives `retainSnapshots` maintenance
-        // cycles (deleting immediately only worked single-process).
-        val fs = hadoopFs(spark, dfDir(root))
-        versions.filter(_ < batchId).sorted.dropRight(retainSnapshots)
-          .foreach(v => fs.delete(new Path(s"${dfDir(root)}/v=$v"), true))
+        // retire superseded snapshots behind the reader grace window
+        // (deleting immediately only worked single-process)
+        IndexCommit.retire(spark, dfDir(root), versions, batchId, retainSnapshots)
       }
     } finally docs.unpersist()
   }

@@ -203,6 +203,8 @@ case class TopKPairsMulti(
     val i = id.eval(input)
     if (s != null && i != null) {
       val arr = s.asInstanceOf[ArrayData]
+      require(arr.numElements() == nQ, s"top_k_pairs_multi: a scores array has " +
+        s"${arr.numElements()} elements but there are $nQ query ids")
       val cid = i.asInstanceOf[Long]
       var q = 0
       while (q < nQ) {

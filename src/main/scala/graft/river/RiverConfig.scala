@@ -1,24 +1,26 @@
 package graft.river
 
-/** The reference's configuration surface (HBaseRiver.java:60-130 — one
-  * field per `river.hbase.*` setting), carried over so a reference user
-  * can map their import config 1:1. Connection fields (`hosts`, `port`)
-  * become the source path; ES index/type become the sink path.
+/** What the river's import reads from the reference's configuration
+  * surface (HBaseRiver.java:60-130). Connection fields (`hosts`,
+  * `port`) become the source path; ES index/type become the sink path.
+  * The reference settings with no field here are operators
+  * (`batchSize` → `River.assignBatches`, `idField` → `River.extractId`,
+  * `normalizeFields` → `River.normalizeField`, `columnSeparator` →
+  * `River.parseQualifier`, `deleteOld` → `River.deleteOldKeys`,
+  * `charset` → Spark's `decode(payload, charset)`) or the caller's
+  * polling schedule (`interval`: `StreamingRiver.run` drains what has
+  * landed and stops); README's migration table maps each.
   */
 final case class RiverConfig(
-    sourcePath: String,            // ref: hosts/port/table — where rows come from
+    sourcePath: String,            // ref: hosts/port/table — where rows come from; no
+                                   // library code reads it (the caller builds the
+                                   // stream), kept because the benchmark
+                                   // (perfbench's Main) constructs it by name
     sinkPath: String,              // ref: index/type — where docs land
     keyCol: String = "event_id",   // ref: rowKey → doc _id
     tsCol: String = "ts",          // ref: cell timestamp driving the watermark
     family: Option[String] = None, // ref: family (HBaseRiver.java:79)
     qualifiers: Seq[String] = Nil, // ref: qualifiers comma-list (":85); Nil = all
-    batchSize: Int = 100,          // ref: batchSize (":70)
-    intervalMs: Long = 600000L,    // ref: interval (":65)
-    charset: String = "UTF-8",     // ref: charset (":74)
-    idField: Option[String] = None,      // ref: idField path (":90)
-    columnSeparator: Option[String] = None, // ref: columnSeparator (":116)
-    normalizeFields: Boolean = true,     // ref: normalizeFields (":110)
-    deleteOld: Boolean = false,          // ref: deleteOld (":95)
     sinkSchemaDdl: Option[String] = None) // ref: customMapping (":122) — declared
                                           // sink schema (Spark DDL), enforced at
                                           // every upsert like the ES mapping is

@@ -65,30 +65,25 @@ object StreamingRiver {
   }
 
   /** One `latestPerKey` pass over `existing ∪ batch` into the snapshot
-    * index. Crash-safe swap: the new snapshot is fully written to a
-    * staging dir, the old index is renamed aside (never deleted while it
-    * is the only copy), the staging becomes the index, then the old copy
-    * is dropped — at every instant either the index or its `__old`
-    * backup exists, and a restarted batch re-merges from whichever
-    * survived. */
+    * index. Crash-safe swap ([[IndexCommit]]): the new snapshot is fully
+    * written to a staging dir, the old index is renamed aside to its
+    * `__old` backup (never deleted while it is the only copy), the
+    * staging becomes the index, then the backup is dropped — a restarted
+    * batch re-merges from whichever copy survived. */
   private def mergeSnapshot(batch: DataFrame, cfg: RiverConfig, seqCol: String): Unit = {
     val spark = batch.sparkSession
     val index = new Path(cfg.sinkPath)
-    val fs = index.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = IndexCommit.fileSystem(spark, cfg.sinkPath)
     val staging = new Path(cfg.sinkPath + "__staging")
     val old = new Path(cfg.sinkPath + "__old")
-    // recover: a crash after the rename-aside leaves only __old
-    if (!fs.exists(index) && fs.exists(old)) fs.rename(old, index)
+    IndexCommit.recover(fs, index, old, fs.exists(index), fs.exists(old))
     val merged =
       if (fs.exists(index))
         River.latestPerKey(readIndex(spark, index, index).unionByName(batch),
           cfg.keyCol, cfg.tsCol, seqCol)
       else River.latestPerKey(batch, cfg.keyCol, cfg.tsCol, seqCol)
     merged.write.mode("overwrite").parquet(staging.toString)
-    fs.delete(old, true)
-    if (fs.exists(index)) fs.rename(index, old)
-    fs.rename(staging, index)
-    fs.delete(old, true)
+    IndexCommit.swapIn(fs, staging, index, old, fs.exists(index))
   }
 
   /** The parquet index at `root`, read with the Spark schema in the
@@ -171,7 +166,7 @@ object StreamingRiver {
     val batch = conform(rawBatch, cfg)
     val spark = batch.sparkSession
     val index = new Path(cfg.sinkPath)
-    val fs = index.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = IndexCommit.fileSystem(spark, cfg.sinkPath)
     def live(b: Int) = new Path(s"${cfg.sinkPath}/kbucket=$b")
     def bak(b: Int) = new Path(s"${cfg.sinkPath}/.kbucket_old_$b")
     def names(dir: Path): Set[String] =
@@ -186,11 +181,8 @@ object StreamingRiver {
     val stray = listed.collect { case BucketDir(b) if b.toInt >= nBuckets => b.toInt }
     require(stray.isEmpty, s"index ${cfg.sinkPath} holds bucket ${stray.max}, " +
       s"so it has more than the $nBuckets buckets of this poll")
-    // recover buckets a crash left renamed-aside; a backup beside its
-    // live bucket is the leftover of a finished swap
-    (0 until nBuckets).filter(b => listed(s".kbucket_old_$b")).foreach { b =>
-      if (listed(s"kbucket=$b")) fs.delete(bak(b), true) else fs.rename(bak(b), live(b))
-    }
+    (0 until nBuckets).foreach(b => IndexCommit.recover(fs, live(b), bak(b),
+      listed(s"kbucket=$b"), listed(s".kbucket_old_$b")))
     val liveBuckets = (0 until nBuckets).filter(b =>
       listed(s"kbucket=$b") || listed(s".kbucket_old_$b")).toSet
     if (counts.isEmpty && liveBuckets.nonEmpty) {
@@ -229,11 +221,8 @@ object StreamingRiver {
     fs.mkdirs(index)
     if (!listed(marker)) fs.create(new Path(index, marker)).close()
     val staged = names(staging)
-    touched.filter(b => staged(s"kbucket=$b")).foreach { b =>
-      if (liveBuckets(b)) fs.rename(live(b), bak(b))
-      fs.rename(new Path(s"$staging/kbucket=$b"), live(b))
-      fs.delete(bak(b), true)
-    }
+    touched.filter(b => staged(s"kbucket=$b")).foreach(b =>
+      IndexCommit.swapIn(fs, new Path(s"$staging/kbucket=$b"), live(b), bak(b), liveBuckets(b)))
     fs.delete(staging, true)
   }
 
@@ -260,6 +249,22 @@ object StreamingRiver {
       .start()
   }
 
+  /** Run a streaming query over a bounded stream to its end into an
+    * in-memory sink and return the sink's table: how the specs compare
+    * each streaming twin below with its batch operator. */
+  def toMemory(df: DataFrame, outputMode: String, queryName: String,
+      checkpointDir: String): DataFrame = {
+    df.writeStream
+      .outputMode(outputMode)
+      .option("checkpointLocation", checkpointDir)
+      .trigger(Trigger.AvailableNow())
+      .format("memory")
+      .queryName(queryName)
+      .start()
+      .awaitTermination()
+    df.sparkSession.table(queryName)
+  }
+
   /** The streaming import: events stream → normalize/project → upsert
     * into the index per micro-batch. */
   def run(events: DataFrame, cfg: RiverConfig, checkpointDir: String,
@@ -268,9 +273,10 @@ object StreamingRiver {
       case Some(f) => events.filter(col("event_type") === f)
       case None => events
     }
+    // the merge orders by seqCol, so the projection keeps it
     val selected =
       if (cfg.qualifiers.nonEmpty)
-        projected.select((cfg.keyCol +: cfg.tsCol +: cfg.qualifiers)
+        projected.select((cfg.keyCol +: cfg.tsCol +: seqCol +: cfg.qualifiers)
           .distinct.map(col): _*)
       else projected
     sink(selected, checkpointDir) { (batch, _) =>
@@ -312,26 +318,6 @@ object StreamingRiver {
           state.update(best)
           best
       }.toDF()
-  }
-
-  /** Run the stateful latest-per-key over a bounded stream into an
-    * in-memory sink and return the final per-key winners. */
-  def runLatestToMemory(spark: SparkSession, events: DataFrame, keyCol: String,
-      seqCol: String, queryName: String, checkpointDir: String): DataFrame = {
-    val q = latestPerKeyStateful(events, keyCol, seqCol).writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    q.awaitTermination()
-    // Update-mode memory sink appends one row per key per batch; the
-    // final state per key is the last emission
-    spark.table(queryName)
-      .groupBy("key")
-      .agg(max(struct(col("ts_us"), col("seq"), col("value"))).as("w"))
-      .select(col("key"), col("w.ts_us"), col("w.seq"), col("w.value"))
   }
 
   /** Streaming exact dedup: drop repeats of a key within the watermark
@@ -376,67 +362,6 @@ object StreamingRiver {
         col("r_ts") <= col("l_ts"))
   }
 
-  /** Run the interval join over a bounded stream into an in-memory sink. */
-  def runIntervalJoinToMemory(spark: SparkSession, events: DataFrame,
-      leftType: String, rightType: String, intervalSec: Long,
-      queryName: String, checkpointDir: String): DataFrame = {
-    val q = intervalJoin(events, leftType, rightType, intervalSec, "10 seconds")
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
-  }
-
-  /** Run the streaming dedup over a bounded stream into an in-memory
-    * sink and return the emitted (deduped) rows. */
-  def runDedupToMemory(spark: SparkSession, events: DataFrame, keyCols: Seq[String],
-      queryName: String, checkpointDir: String): DataFrame = {
-    val q = streamingDedup(events, keyCols, "10 seconds").writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
-  }
-
-  /** Run the streaming sessionization over a bounded stream into an
-    * in-memory sink; append mode emits each session once it closes. */
-  def runSessionsToMemory(spark: SparkSession, events: DataFrame, gap: String,
-      queryName: String, checkpointDir: String): DataFrame = {
-    val q = sessionWindows(events, gap, "10 seconds").writeStream
-      .outputMode("complete")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
-  }
-
-  /** Run the windowed aggregation over a bounded stream into an
-    * in-memory sink and return the completed result. */
-  def runWindowedToMemory(spark: SparkSession, events: DataFrame,
-      windowLen: String, queryName: String, checkpointDir: String): DataFrame = {
-    val q = windowedCounts(events, windowLen, "10 seconds").writeStream
-      .outputMode("complete")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
-  }
-
   /** Trending terms (round 13) — the streaming "what is being written
     * about RIGHT NOW" surface ES dashboards build from date_histogram +
     * terms: tumbling-window term counts over a timestamped doc stream,
@@ -455,21 +380,6 @@ object StreamingRiver {
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").as("win_start"), col("term"), col("n"))
 
-  /** Run trending terms over a bounded stream into an in-memory sink
-    * (complete mode) and return every (window, term, n) row. */
-  def runTrendingToMemory(spark: SparkSession, docStream: DataFrame,
-      windowLen: String, queryName: String, checkpointDir: String): DataFrame = {
-    val q = trendingTerms(docStream, windowLen, "10 seconds").writeStream
-      .outputMode("complete")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
-  }
-
   /** Streaming percolation (round 13) — the canonical ES percolator
     * deployment: registered alert queries stand, DOCUMENTS stream past
     * them, each arriving doc emits its matching (doc_id, query_id)
@@ -483,22 +393,6 @@ object StreamingRiver {
   def streamingPercolate(docStream: DataFrame,
       queries: Seq[(String, graft.text.BoolDsl.Query)]): DataFrame =
     graft.text.BoolDsl.percolateDsl(docStream, queries)
-
-  /** Run the streaming percolator over a bounded doc stream into an
-    * in-memory sink and return every emitted match. */
-  def runPercolateToMemory(spark: SparkSession, docStream: DataFrame,
-      queries: Seq[(String, graft.text.BoolDsl.Query)],
-      queryName: String, checkpointDir: String): DataFrame = {
-    val q = streamingPercolate(docStream, queries).writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
-  }
 
   /** Per-key running sums for the streaming anomaly detector — EXACT
     * integer state (value is 2-decimal money: cents = round(100·v) is
@@ -556,22 +450,6 @@ object StreamingRiver {
       }.toDF()
   }
 
-  /** Run the anomaly detector over a bounded stream into an in-memory
-    * sink and return every emitted alert. */
-  def runAnomaliesToMemory(spark: SparkSession, events: DataFrame,
-      k: Double, minN: Long, queryName: String,
-      checkpointDir: String): DataFrame = {
-    val q = anomalies(events, k, minN).writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
-  }
-
   /** STREAMING RELEASE GATE (r15 continuation — the batch release
     * chain's ingest-time form: documents pass the gate as they arrive
     * instead of in a nightly recompute). Stages, all from the batch
@@ -626,37 +504,6 @@ object StreamingRiver {
     graft.pipeline.Pipeline.spanCorruption(
       docStream.filter(graft.pipeline.Pipeline.qualityPassCol))
 
-  /** Run the streaming mask planner over a bounded doc stream into an
-    * in-memory sink and return every emitted plan row. */
-  def runMaskPlannerToMemory(spark: SparkSession, docStream: DataFrame,
-      queryName: String, checkpointDir: String): DataFrame = {
-    val q = streamingMaskPlanner(docStream).writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
-  }
-
-  /** Run the streaming release gate over a bounded doc stream into an
-    * in-memory sink and return every released row. */
-  def runReleaseGateToMemory(spark: SparkSession, docStream: DataFrame,
-      benchGrams: DataFrame, n: Int, queryName: String,
-      checkpointDir: String): DataFrame = {
-    val q = streamingReleaseGate(docStream, benchGrams, n).writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
-  }
-
   /** STREAMING IMPORTANCE RESAMPLING (round 18 — the at-ingest form of
     * [[graft.pipeline.Pipeline.importanceResample]]): documents are
     * scored against a FROZEN target/corpus unigram model (trained once
@@ -672,22 +519,4 @@ object StreamingRiver {
       lambdaInv: Int = 2): DataFrame =
     graft.pipeline.Pipeline.importanceResampleFrozen(docStream,
       targetSources, ct, ca, tTgt, tAll, lambdaInv)
-
-  /** Run the streaming resampler over a bounded doc stream into an
-    * in-memory sink and return every accepted row. */
-  def runResampleToMemory(spark: SparkSession, docStream: DataFrame,
-      targetSources: Seq[String], ct: Map[String, Long],
-      ca: Map[String, Long], tTgt: Long, tAll: Long, queryName: String,
-      checkpointDir: String): DataFrame = {
-    val q = streamingResample(docStream, targetSources, ct, ca, tTgt, tAll)
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
-  }
 }

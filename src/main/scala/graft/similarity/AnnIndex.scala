@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.functions.GraftFunctions
+import graft.river.IndexCommit
 
 /** Maintained IVF index for ANN search (VERDICT r11 next #5 — the
   * [[graft.dedup.DedupIndex]] pattern applied to [[Ann.ivfTopK]]).
@@ -49,19 +50,9 @@ object AnnIndex {
   private def assignDir(root: String) = s"$root/assignments"
   private def pqDir(root: String) = s"$root/pq"
 
-  private def hadoopFs(spark: SparkSession, path: String) =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   /** Complete (committed) centroid versions, ascending. */
-  def centroidVersions(spark: SparkSession, root: String): Seq[Long] = {
-    val fs = hadoopFs(spark, centsDir(root))
-    val base = new Path(centsDir(root))
-    if (!fs.exists(base)) Seq.empty
-    else fs.listStatus(base).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("v="))
-      .filter(s => fs.exists(new Path(s.getPath, "_SUCCESS")))
-      .map(_.getPath.getName.stripPrefix("v=").toLong).sorted
-  }
+  def centroidVersions(spark: SparkSession, root: String): Seq[Long] =
+    IndexCommit.versions(spark, centsDir(root))
 
   /** Train the centroid matrix on `trainEmb` and commit it as version
     * `batchId` — a no-op if that version already exists (replay).
@@ -139,7 +130,7 @@ object AnnIndex {
   def readPqCodebooksV(spark: SparkSession, root: String,
       version: Long): IndexedSeq[Array[Array[Double]]] = {
     val p = new Path(s"${pqDir(root)}/v=$version")
-    val fs = hadoopFs(spark, p.toString)
+    val fs = IndexCommit.fileSystem(spark, p.toString)
     if (!fs.exists(new Path(p, "_SUCCESS"))) IndexedSeq.empty
     else spark.read.parquet(p.toString).collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
@@ -178,8 +169,8 @@ object AnnIndex {
     // ADVICE): mode("overwrite") directly on the ingest dir deletes
     // `_SUCCESS` + data files non-atomically, so a reader that passed
     // the committedIngests check just before the overwrite could still
-    // see a torn partition. With rename-aside (the StreamingRiver
-    // upsertBatch discipline) a reader sees a COMPLETE batch whenever
+    // see a torn partition. With rename-aside (IndexCommit.swapIn, as
+    // in StreamingRiver.upsertBatch) a reader sees a COMPLETE batch whenever
     // it sees one at all — never a mix. Known residual window (ADVICE
     // r15): between rename(dest → old) and rename(staging → dest) the
     // ingest partition exists under NEITHER name, so a concurrent
@@ -196,11 +187,9 @@ object AnnIndex {
     val dest = new Path(s"${assignDir(root)}/cv=$v/ingest=$batchId")
     val staging = new Path(s"${assignDir(root)}/cv=$v/.staging-ingest-$batchId")
     val old = new Path(s"${assignDir(root)}/cv=$v/.old-ingest-$batchId")
-    val fs = hadoopFs(spark, dest.toString)
-    // recover from a crash between rename-aside and rename-into-place
-    if (!fs.exists(dest) && fs.exists(old)) fs.rename(old, dest)
+    val fs = IndexCommit.fileSystem(spark, dest.toString)
+    IndexCommit.recover(fs, dest, old, fs.exists(dest), fs.exists(old))
     if (fs.exists(staging)) fs.delete(staging, true)
-    if (fs.exists(old)) fs.delete(old, true)
     // versions trained with PQ (trainCentroids pqM > 0) also encode the
     // m-code PQ words at ingest — the IVFADC composition: codes ride
     // the cent_id partition files, so a probe ADC-scans probed lists
@@ -216,9 +205,7 @@ object AnnIndex {
     encoded
       .write.partitionBy("cent_id").mode("overwrite")
       .parquet(staging.toString)
-    if (fs.exists(dest)) fs.rename(dest, old)
-    fs.rename(staging, dest)
-    fs.delete(old, true)
+    IndexCommit.swapIn(fs, staging, dest, old, fs.exists(dest))
   }
 
   /** The cluster-bucketed corpus across every ingested batch, with the
@@ -236,7 +223,7 @@ object AnnIndex {
     * directory. Metadata-scale listing (versions × batches dirs). */
   private def committedIngests(spark: SparkSession, root: String): Seq[Path] = {
     val base = new Path(assignDir(root))
-    val fs = hadoopFs(spark, assignDir(root))
+    val fs = IndexCommit.fileSystem(spark, assignDir(root))
     if (!fs.exists(base)) Seq.empty
     else for {
       cv <- fs.listStatus(base).toSeq

@@ -1,9 +1,10 @@
 package graft.text
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+
+import graft.river.IndexCommit
 
 /** Streaming maintenance of the SUGGESTER VOCABULARY index — the table
   * ES builds at index time (its completion suggester's FST) and this
@@ -37,19 +38,9 @@ object TermsIndex {
 
   private def vocabDir(root: String) = s"$root/vocab"
 
-  private def hadoopFs(spark: SparkSession, path: String) =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   /** Complete (committed) vocab snapshot versions, ascending. */
-  def versions(spark: SparkSession, root: String): Seq[Long] = {
-    val fs = hadoopFs(spark, vocabDir(root))
-    val base = new Path(vocabDir(root))
-    if (!fs.exists(base)) Seq.empty
-    else fs.listStatus(base).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("v="))
-      .filter(s => fs.exists(new Path(s.getPath, "_SUCCESS")))
-      .map(_.getPath.getName.stripPrefix("v=").toLong).sorted
-  }
+  def versions(spark: SparkSession, root: String): Seq[Long] =
+    IndexCommit.versions(spark, vocabDir(root))
 
   /** The maintained (term, n_occ, n_docs) table — newest complete
     * snapshot. */
@@ -85,9 +76,7 @@ object TermsIndex {
         case None => delta
       }
       merged.write.mode("overwrite").parquet(s"${vocabDir(root)}/v=$batchId")
-      val fs = hadoopFs(spark, vocabDir(root))
-      vs.filter(_ < batchId).sorted.dropRight(retainSnapshots)
-        .foreach(v => fs.delete(new Path(s"${vocabDir(root)}/v=$v"), true))
+      IndexCommit.retire(spark, vocabDir(root), vs, batchId, retainSnapshots)
     }
   }
 

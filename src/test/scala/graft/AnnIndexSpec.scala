@@ -53,6 +53,29 @@ class AnnIndexSpec extends SparkSpec {
     assert(AnnIndex.centroidVersions(spark, root) == Seq(0L))
   }
 
+  test("an ingest a crash left renamed aside is seen exactly once after the replayed append") {
+    import org.apache.hadoop.fs.{FileUtil, Path}
+    val root = tmp("ann-idx")
+    buildIndex(root)
+    val before = assignSet(AnnIndex.assignments(spark, root))
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def ingest(b: Int) = new Path(s"$root/assignments/cv=0/ingest=$b")
+    def old(b: Int) = new Path(s"$root/assignments/cv=0/.old-ingest-$b")
+    // batch 2: a crash between the two renames left only the backup;
+    // batch 1: a crash after them left the backup beside its ingest
+    assert(fs.rename(ingest(2), old(2)))
+    assert(FileUtil.copy(fs, ingest(1), fs, old(1), false, spark.sparkContext.hadoopConfiguration))
+    val ids = (df: DataFrame) => df.select("vec_id").collect().map(_.getLong(0)).toSeq
+    assert(ids(AnnIndex.assignments(spark, root)).sorted ==
+      ids(emb.filter(col("vec_id") % 3 =!= 2)).sorted, "a backup is not a committed ingest")
+    // foreachBatch replays both batch ids after the crash
+    Seq(2L, 1L).foreach(b => AnnIndex.appendBatch(emb.filter(col("vec_id") % 3 === b), b, root))
+    val got = ids(AnnIndex.assignments(spark, root))
+    assert(got.size == got.distinct.size && got.size == emb.count())
+    assert(assignSet(AnnIndex.assignments(spark, root)) == before)
+    assert(!fs.exists(old(2)) && !fs.exists(old(1)))
+  }
+
   test("indexed query equals the recompute form with the same frozen centroids") {
     val root = tmp("ann-idx")
     buildIndex(root)

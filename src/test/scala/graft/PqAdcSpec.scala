@@ -90,6 +90,17 @@ class PqAdcSpec extends SparkSpec {
     assert(a.sortBy(t => (t._1, -t._2, t._3)) == ref)
   }
 
+  test("TopKPairsMulti fails naming both lengths on a scores array shorter than the query ids") {
+    import spark.implicits._
+    val df = Seq((7L, Seq(1.0, 2.0))).toDF("id", "scores")
+    val e = intercept[Exception](df
+      .agg(TopKPairsMulti.topKAll(col("scores"), col("id"), 2, Array(0L, 1L, 2L)))
+      .collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toList
+    assert(msgs.exists(_.contains("has 2 elements but there are 3 query ids")), msgs)
+  }
+
   test("pqTopK equals the previous exploded candidate-stage form end-to-end") {
     val emb = Tables.embeddings(spark, sfDir)
     val nQueries = 10; val k = 5; val m = 16; val ks = 16

@@ -19,8 +19,9 @@ class StreamingOpsSpec extends SparkSpec {
     events.write.mode("append").parquet(src)
     val stream = spark.readStream.schema(events.schema).parquet(src)
 
-    val got = StreamingRiver.runDedupToMemory(
-      spark, stream, Seq("event_id"), "dstream", tmp("dedup-ckpt"))
+    val got = StreamingRiver.toMemory(
+      StreamingRiver.streamingDedup(stream, Seq("event_id"), "10 seconds"),
+      "append", "dstream", tmp("dedup-ckpt"))
     assert(got.select("event_id").distinct().count() == got.count(),
       "a key was emitted more than once")
     assert(got.count() == events.count(),
@@ -42,8 +43,8 @@ class StreamingOpsSpec extends SparkSpec {
         filter = Seq(RangeQ("n_chars", gte = Some(200)))),
       "alert2" -> Bool(should = Seq(MatchQ("join"), MatchQ("vector")),
         filter = Seq(TermQ("lang", "en")), minimumShouldMatch = 1))
-    val got = StreamingRiver.runPercolateToMemory(
-      spark, stream, queries, "perc_stream", tmp("perc-ckpt"))
+    val got = StreamingRiver.toMemory(StreamingRiver.streamingPercolate(stream, queries),
+      "append", "perc_stream", tmp("perc-ckpt"))
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
     val batch = BoolDsl.percolateDsl(docs, queries)
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
@@ -64,8 +65,8 @@ class StreamingOpsSpec extends SparkSpec {
     val bench = docs.filter(col("source").isin("src0", "src1"))
       .select(explode(array_distinct(Pipeline.wordNgrams(col("text"), 4))).as("gram"))
       .distinct()
-    val got = StreamingRiver.runReleaseGateToMemory(
-      spark, stream, bench, 4, "gate_stream", tmp("gate-ckpt"))
+    val got = StreamingRiver.toMemory(StreamingRiver.streamingReleaseGate(stream, bench, 4),
+      "append", "gate_stream", tmp("gate-ckpt"))
       .collect().map(r => r.getString(2) -> r.getString(3)).toMap
     // batch recompute with the same shared stages; keeper identity is
     // arrival-order in the stream, so compare at fingerprint grain
@@ -111,9 +112,9 @@ class StreamingOpsSpec extends SparkSpec {
     val stream = spark.readStream.schema(docs.schema).parquet(src)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    val streamed = rows(StreamingRiver.runResampleToMemory(
-      spark, stream, tgt, ct, ca, tT, tA, "resample_stream",
-      tmp("resample-ckpt")))
+    val streamed = rows(StreamingRiver.toMemory(
+      StreamingRiver.streamingResample(stream, tgt, ct, ca, tT, tA),
+      "append", "resample_stream", tmp("resample-ckpt")))
     val frozen = rows(Pipeline.importanceResampleFrozen(docs, tgt, ct, ca, tT, tA))
     val full = rows(Pipeline.importanceResample(docs, tgt))
     assert(streamed == frozen, "streamed verdicts must equal the batch frozen form")
@@ -132,8 +133,8 @@ class StreamingOpsSpec extends SparkSpec {
       docs.filter(col("doc_id") % 3 === b)
         .write.mode("append").parquet(src))
     val stream = spark.readStream.schema(docs.schema).parquet(src)
-    val got = StreamingRiver.runMaskPlannerToMemory(
-      spark, stream, "plan_stream", tmp("plan-ckpt"))
+    val got = StreamingRiver.toMemory(StreamingRiver.streamingMaskPlanner(stream),
+      "append", "plan_stream", tmp("plan-ckpt"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .toSet
     val batch = Pipeline.spanCorruption(docs.filter(Pipeline.qualityPassCol))
@@ -152,8 +153,9 @@ class StreamingOpsSpec extends SparkSpec {
     (0 until 3).foreach(b =>
       stamped.filter(col("doc_id") % 3 === b).write.mode("append").parquet(src))
     val stream = spark.readStream.schema(stamped.schema).parquet(src)
-    val got = StreamingRiver.runTrendingToMemory(
-      spark, stream, "10 minutes", "trend_stream", tmp("trend-ckpt"))
+    val got = StreamingRiver.toMemory(
+      StreamingRiver.trendingTerms(stream, "10 minutes", "10 seconds"),
+      "complete", "trend_stream", tmp("trend-ckpt"))
       .collect().map(r => (r.getTimestamp(0).getTime, r.getString(1)) -> r.getLong(2)).toMap
     val batch = stamped
       .select(col("ts"), explode(split(lower(col("text")), "\\s+")).as("term"))
@@ -172,8 +174,9 @@ class StreamingOpsSpec extends SparkSpec {
     events.write.mode("overwrite").parquet(src)
     val stream = spark.readStream.schema(events.schema).parquet(src)
 
-    val streamed = StreamingRiver.runIntervalJoinToMemory(
-        spark, stream, "purchase", "click", 600L, "ijstream", tmp("ij-ckpt"))
+    val streamed = StreamingRiver.toMemory(
+        StreamingRiver.intervalJoin(stream, "purchase", "click", 600L, "10 seconds"),
+        "append", "ijstream", tmp("ij-ckpt"))
       .select("l_id", "r_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
 
@@ -209,8 +212,9 @@ class StreamingOpsSpec extends SparkSpec {
     events.write.mode("overwrite").parquet(src)
     val stream = spark.readStream.schema(events.schema).parquet(src)
 
-    val streamed = StreamingRiver.runSessionsToMemory(
-        spark, stream, "30 minutes", "sstream", tmp("sess-ckpt"))
+    val streamed = StreamingRiver.toMemory(
+        StreamingRiver.sessionWindows(stream, "30 minutes", "10 seconds"),
+        "complete", "sstream", tmp("sess-ckpt"))
       .collect()
       .map(r => (r.getLong(0), r.getTimestamp(1), r.getTimestamp(2)) -> r.getLong(3))
       .toMap
@@ -250,8 +254,8 @@ class StreamingOpsSpec extends SparkSpec {
     val stream = spark.readStream
       .schema(b1.toDF("event_type", "event_id", "value").schema)
       .option("maxFilesPerTrigger", "1").parquet(src)
-    val got = StreamingRiver.runAnomaliesToMemory(
-        spark, stream, 3.0, 5L, "anomstream", tmp("anom-ckpt"))
+    val got = StreamingRiver.toMemory(StreamingRiver.anomalies(stream, 3.0, 5L),
+        "append", "anomstream", tmp("anom-ckpt"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2),
         r.getDouble(3), r.getDouble(4))).toSet
 

@@ -157,6 +157,50 @@ class StreamingRiverSpec extends SparkSpec {
     assert(batch.nonEmpty)
   }
 
+  test("snapshot upsert restores and merges an index a crash left renamed aside") {
+    import org.apache.hadoop.fs.Path
+    val sink = tmp("river8-sink") + "/index"
+    val events = Tables.events(spark, sfDir).cache()
+    val cfg = RiverConfig(sourcePath = "n/a", sinkPath = sink, keyCol = "user_id")
+    val batch1 = events.filter(col("event_id") % 2 === 0)
+    StreamingRiver.upsertBatch(batch1, cfg, "event_id")
+    // a crash after the rename-aside: the index survives only as its backup
+    val fs = new Path(sink).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.rename(new Path(sink), new Path(sink + "__old")))
+
+    val batch2 = events.filter(col("event_id") % 2 === 1)
+    StreamingRiver.upsertBatch(batch2, cfg, "event_id")
+    assert(fs.exists(new Path(sink)) && !fs.exists(new Path(sink + "__old")))
+    val got = spark.read.parquet(sink)
+      .select("user_id", "event_id").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val expect = River.latestPerKey(events, "user_id", "ts", "event_id")
+      .select("user_id", "event_id").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == expect)
+    // the restored index took part in the merge: some key's winner is from batch 1
+    assert(got.values.exists(_ % 2 == 0))
+  }
+
+  test("streaming run with qualifiers keeps seqCol and equals latestPerKey over the projection") {
+    val src = tmp("river9-src")
+    val sink = tmp("river9-sink") + "/index"
+    val events = Tables.events(spark, sfDir).cache()
+    events.repartition(2).write.mode("overwrite").parquet(src)
+    val stream = spark.readStream.schema(events.schema).parquet(src)
+    val cfg = RiverConfig(sourcePath = src, sinkPath = sink, keyCol = "user_id",
+      qualifiers = Seq("value"))
+    StreamingRiver.run(stream, cfg, tmp("river9-ckpt")).awaitTermination()
+
+    val cols = Seq("user_id", "ts", "event_id", "value")
+    val idx = spark.read.parquet(sink)
+    assert(idx.columns.toSeq.sorted == cols.sorted, idx.columns.toSeq)
+    def rows(df: DataFrame) = df.select("user_id", "event_id", "value").collect()
+      .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
+    val expect = rows(River.latestPerKey(events.select(cols.map(col): _*),
+      "user_id", "ts", "event_id"))
+    assert(rows(idx) == expect)
+    assert(expect.nonEmpty)
+  }
+
   test("partitioned upsert restores and merges buckets a crash left renamed aside") {
     import org.apache.hadoop.fs.Path
     val sink = tmp("river7-sink") + "/index"
@@ -406,8 +450,14 @@ class StreamingRiverSpec extends SparkSpec {
     val stream = spark.readStream.schema(events.schema)
       .option("maxFilesPerTrigger", "1").parquet(src)
 
-    val streamed = StreamingRiver.runLatestToMemory(
-        spark, stream, "user_id", "event_id", "lstream", ckpt)
+    // the Update-mode memory sink appends one row per key per batch;
+    // the final state per key is the last emission
+    val streamed = StreamingRiver.toMemory(
+        StreamingRiver.latestPerKeyStateful(stream, "user_id", "event_id"),
+        "update", "lstream", ckpt)
+      .groupBy("key")
+      .agg(max(struct(col("ts_us"), col("seq"), col("value"))).as("w"))
+      .select(col("key"), col("w.ts_us"), col("w.seq"), col("w.value"))
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
 
     val batch = graft.river.River.latestPerKey(events, "user_id", "ts", "event_id")
@@ -424,8 +474,9 @@ class StreamingRiverSpec extends SparkSpec {
     events.write.mode("overwrite").parquet(src)
     val stream = spark.readStream.schema(events.schema).parquet(src)
 
-    val streamed = StreamingRiver.runWindowedToMemory(
-        spark, stream, "5 minutes", "wstream", ckpt)
+    val streamed = StreamingRiver.toMemory(
+        StreamingRiver.windowedCounts(stream, "5 minutes", "10 seconds"),
+        "complete", "wstream", ckpt)
       .select(col("window.start").as("ws"), col("event_type"), col("n"), col("sum_value"))
       .collect().map(r => (r.getTimestamp(0), r.getString(1)) ->
         (r.getLong(2), math.round(r.getDouble(3) * 100))).toMap
