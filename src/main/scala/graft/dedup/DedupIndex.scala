@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.river.IndexCommit
+import graft.util.ParquetRead
 
 /** Streaming maintenance of the dedup indexes (SURVEY §2 round 11).
   *
@@ -52,7 +53,7 @@ object DedupIndex {
   def shingleDfTable(spark: SparkSession, root: String): DataFrame = {
     val vs = dfVersions(spark, root)
     require(vs.nonEmpty, s"no shingle_df snapshot under $root")
-    spark.read.parquet(s"${dfDir(root)}/v=${vs.last}")
+    ParquetRead.read(spark, s"${dfDir(root)}/v=${vs.last}")
   }
 
   /** The maintained hot-shingle table (df > maxDf) — the exact input
@@ -63,7 +64,7 @@ object DedupIndex {
   /** The maintained LSH band index (band, band_hash, doc_id) across all
     * ingested batches. */
   def bandTable(spark: SparkSession, root: String): DataFrame =
-    spark.read.parquet(bandsDir(root))
+    ParquetRead.read(spark, bandsDir(root))
       .select("band", "band_hash", "doc_id")
 
   /** Merge one ingest batch of documents (doc_id, text) into both
@@ -92,7 +93,7 @@ object DedupIndex {
               Dedup.shingleSetFromTokens(col("toks"), n).as("sh")))
         val merged = versions.filter(_ < batchId).lastOption match {
           case Some(v) =>
-            spark.read.parquet(s"${dfDir(root)}/v=$v")
+            ParquetRead.read(spark, s"${dfDir(root)}/v=$v")
               .unionByName(batchCounts)
               .groupBy("shingle").agg(sum(col("df")).as("df"))
           case None => batchCounts

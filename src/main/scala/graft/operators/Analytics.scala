@@ -961,11 +961,13 @@ object Analytics {
     val allRanges = full.init.zipWithIndex
       .map { case (lo, i) => (i.toLong, dotted(lo), dotted(full(i + 1))) }
       .toDF("range_idx", "ip_from", "ip_to")
-    events.select(u32.as("__u32"), col("user_id"))
+    val counts = events.select(u32.as("__u32"), col("user_id"))
       .select(rangeIdx.cast("long").as("range_idx"), col("user_id"))
       .groupBy("range_idx")
       .agg(count(lit(1)).as("n"), countDistinct(col("user_id")).as("n_users"))
-      .join(broadcast(allRanges), Seq("range_idx"), "right")
+    // every range kept; the per-range counts (one row per range at
+    // most) are the broadcast build side of the left outer join
+    allRanges.join(broadcast(counts), Seq("range_idx"), "left")
       .select(col("range_idx"), col("ip_from"), col("ip_to"),
         coalesce(col("n"), lit(0L)).as("n"),
         coalesce(col("n_users"), lit(0L)).as("n_users"))

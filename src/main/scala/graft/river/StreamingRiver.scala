@@ -1,15 +1,10 @@
 package graft.river
 
-import scala.util.Try
-
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{DataType, StructField, StructType}
+import graft.util.ParquetRead
 
 /** Structured Streaming form of the river (SURVEY §2 group 1): the
   * reference's poll loop (`HBaseParser.run:50` — scan past the
@@ -79,39 +74,20 @@ object StreamingRiver {
     IndexCommit.recover(fs, index, old, fs.exists(index), fs.exists(old))
     val merged =
       if (fs.exists(index))
-        River.latestPerKey(readIndex(spark, index, index).unionByName(batch),
+        River.latestPerKey(ParquetRead.read(spark, cfg.sinkPath).unionByName(batch),
           cfg.keyCol, cfg.tsCol, seqCol)
       else River.latestPerKey(batch, cfg.keyCol, cfg.tsCol, seqCol)
     merged.write.mode("overwrite").parquet(staging.toString)
     IndexCommit.swapIn(fs, staging, index, old, fs.exists(index))
   }
 
-  /** The parquet index at `root`, read with the Spark schema in the
-    * footer of one parquet file of `sampleDir` (read on the driver) plus
-    * the index's `partition` columns. With `mergeSchema` off, that is the
-    * schema `spark.read.parquet` would infer from one footer, without the
-    * inference job; with no footer to read it falls back to that path. */
-  private def readIndex(spark: SparkSession, root: Path, sampleDir: Path,
-      partition: Seq[StructField] = Nil): DataFrame = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    Try {
-      val sample = sampleDir.getFileSystem(conf).listStatus(sampleDir).map(_.getPath)
-        .filter(_.getName.endsWith(".parquet")).minBy(_.getName)
-      val rd = ParquetFileReader.open(HadoopInputFile.fromPath(sample, conf))
-      val footer = try DataType.fromJson(rd.getFooter.getFileMetaData.getKeyValueMetaData
-        .get(ParquetReadSupport.SPARK_METADATA_KEY)).asInstanceOf[StructType]
-      finally rd.close()
-      spark.read.schema(StructType(footer.fields ++ partition)).parquet(root.toString)
-    }.getOrElse(spark.read.parquet(root.toString))
-  }
-
   /** The live view of a tombstone-carrying index: rows whose delete
     * flag is false. The tombstones stay on disk (see
     * [[upsertBatchWithDeletes]]); this is the read every consumer
     * takes. */
-  def liveIndex(spark: org.apache.spark.sql.SparkSession, cfg: RiverConfig,
+  def liveIndex(spark: SparkSession, cfg: RiverConfig,
       deleteCol: String): DataFrame =
-    spark.read.parquet(cfg.sinkPath).filter(!col(deleteCol)).drop(deleteCol)
+    ParquetRead.read(spark, cfg.sinkPath).filter(!col(deleteCol)).drop(deleteCol)
 
   /** Streaming CDC import with deletes: change stream → foreachBatch
     * tombstone-aware upsert ([[upsertBatchWithDeletes]]). */
@@ -187,7 +163,7 @@ object StreamingRiver {
       listed(s"kbucket=$b") || listed(s".kbucket_old_$b")).toSet
     if (counts.isEmpty && liveBuckets.nonEmpty) {
       val b = liveBuckets.max
-      require(readIndex(spark, live(b), live(b))
+      require(ParquetRead.read(spark, live(b).toString)
         .filter(pmod(hash(col(cfg.keyCol)), lit(nBuckets)) =!= b).isEmpty,
         s"index ${cfg.sinkPath} has no _kbuckets_<n> file and its bucket $b holds keys " +
           s"of other buckets at $nBuckets; it was written with another bucket count")
@@ -205,7 +181,7 @@ object StreamingRiver {
         val sample = touched.find(liveBuckets).getOrElse(liveBuckets.min)
         // kbucket is a partition column → this filter prunes directories:
         // untouched buckets are never opened
-        readIndex(spark, index, live(sample), Seq(bucketed.schema("kbucket")))
+        ParquetRead.read(spark, cfg.sinkPath, Some(live(sample).toString))
           .filter(col("kbucket").isin(touched.map(Integer.valueOf).toSeq: _*))
           .unionByName(bucketed)
       }

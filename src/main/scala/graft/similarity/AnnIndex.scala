@@ -7,6 +7,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.functions.GraftFunctions
 import graft.river.IndexCommit
+import graft.util.ParquetRead
 
 /** Maintained IVF index for ANN search (VERDICT r11 next #5 — the
   * [[graft.dedup.DedupIndex]] pattern applied to [[Ann.ivfTopK]]).
@@ -132,7 +133,7 @@ object AnnIndex {
     val p = new Path(s"${pqDir(root)}/v=$version")
     val fs = IndexCommit.fileSystem(spark, p.toString)
     if (!fs.exists(new Path(p, "_SUCCESS"))) IndexedSeq.empty
-    else spark.read.parquet(p.toString).collect()
+    else ParquetRead.read(spark, p.toString).collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
       .groupBy(_._1).toIndexedSeq.sortBy(_._1)
       .map(_._2.sortBy(_._2).map(_._3))
@@ -142,7 +143,7 @@ object AnnIndex {
     * order. nCentroids × dim doubles — metadata scale, the one
     * sanctioned driver-side collect here. */
   def readCentroidsV(spark: SparkSession, root: String, version: Long): Seq[(Int, Seq[Double])] =
-    spark.read.parquet(s"${centsDir(root)}/v=$version")
+    ParquetRead.read(spark, s"${centsDir(root)}/v=$version")
       .orderBy("cent_id").collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1).toSeq)).toSeq
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.river.IndexCommit
+import graft.util.ParquetRead
 
 /** Streaming maintenance of the SUGGESTER VOCABULARY index — the table
   * ES builds at index time (its completion suggester's FST) and this
@@ -47,7 +48,7 @@ object TermsIndex {
   def vocabTable(spark: SparkSession, root: String): DataFrame = {
     val vs = versions(spark, root)
     require(vs.nonEmpty, s"no vocab snapshot under $root")
-    spark.read.parquet(s"${vocabDir(root)}/v=${vs.last}")
+    ParquetRead.read(spark, s"${vocabDir(root)}/v=${vs.last}")
   }
 
   /** This batch's per-term counts — the module tokenization convention
@@ -69,7 +70,7 @@ object TermsIndex {
       val delta = batchCounts(batchDocs)
       val merged = vs.filter(_ < batchId).lastOption match {
         case Some(v) =>
-          spark.read.parquet(s"${vocabDir(root)}/v=$v")
+          ParquetRead.read(spark, s"${vocabDir(root)}/v=$v")
             .unionByName(delta)
             .groupBy("term")
             .agg(sum(col("n_occ")).as("n_occ"), sum(col("n_docs")).as("n_docs"))

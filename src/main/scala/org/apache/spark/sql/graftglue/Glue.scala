@@ -1,13 +1,21 @@
 package org.apache.spark.sql.graftglue
 
+import org.apache.hadoop.fs.FileStatus
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.HadoopFSUtils
 
 /** Narrow glue onto Spark's `private[sql]` surface (Column ↔ Catalyst
-  * Expression, function registration). Lives under `org.apache.spark.sql`
-  * for visibility — the standard pattern for Spark extension libraries;
-  * everything else in graft stays in public API land.
+  * Expression, function registration, parquet footer schemas). Lives
+  * under `org.apache.spark.sql` for visibility — the standard pattern
+  * for Spark extension libraries; everything else in graft stays in
+  * public API land.
   */
 object Glue {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -18,13 +26,40 @@ object Glue {
     * resolves it (temp function in the session's FunctionRegistry). */
   def registerFunction(spark: SparkSession, name: String,
       builder: Seq[Expression] => Expression): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
+    classic(spark).sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "scala_udf")
 
   /** `batch` as a DataFrame of `home`, zero-copy (its planned
     * `InternalRow` RDD, no external `Row`s): jobs over it run in `home`. */
   def rehome(home: SparkSession, batch: DataFrame): DataFrame =
-    home.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .internalCreateDataFrame(batch.queryExecution.toRdd, batch.schema, false)
+    classic(home).internalCreateDataFrame(batch.queryExecution.toRdd, batch.schema, false)
+
+  /** True for a name Spark's file listing skips (`_`/`.` prefixed
+    * without `=`, `._COPYING_`), except the `_metadata` and
+    * `_common_metadata` summaries, which it keeps. */
+  def hiddenName(name: String): Boolean = HadoopFSUtils.shouldFilterOutPathName(name)
+
+  /** The Spark schema of one parquet footer, read on the driver exactly
+    * as `ParquetFileFormat.mergeSchemasInParallel` reads each footer it
+    * touches: row groups skipped, the Spark schema stored in the footer
+    * if there is one, else the parquet schema converted under the
+    * session's binary, INT96, NTZ-inference, nanos and unknown-type
+    * confs. */
+  def parquetFooterSchema(spark: SparkSession, file: FileStatus): StructType = {
+    val session = classic(spark)
+    val conf = session.sessionState.conf
+    val converter = new ParquetToSparkSchemaConverter(
+      assumeBinaryIsString = conf.isParquetBinaryAsString,
+      assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+      inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+      nanosAsLong = conf.legacyParquetNanosAsLong,
+      respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation)
+    val metadata = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(file, session.sessionState.newHadoopConf()),
+      ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, metadata), converter)
+  }
+
+  private def classic(spark: SparkSession) =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
 }
