@@ -334,15 +334,12 @@ object Bench {
       else s""""host_ref":${f3(hostCalibs.min)},"host_max":${f3(hostCalibs.max)}"""
     def stampJson(qs: Seq[(String, Double)]): String =
       s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":${jmap(qs)},"sf":"$sfDir","calib_ref":${ref.map(f3).getOrElse("null")},$calibStats,$hostStats,"n_calibs":${calibs.size},"n_dirty":${dirtyNames.size},"dirty":$dirtyJson,"n_errored":${errored.size},"contaminated":$contaminated,"attempts":$attempts,"ref_armed":${committedRef.nonEmpty},"n_ref_outliers":${refOut.size},"ref_outliers":$refOutJson}"""
-    println(stampJson(stamped))
-    // The stdout contract line above has been unparseable by the driver
-    // for 21 rounds (`parsed: null` in every BENCH_r*.json — sbt
-    // prefixes it `[info] ` and the driver keeps only the last 2000
-    // log chars). VERDICT r21 #1: ALSO write the stamp — with the FULL
-    // per-query map, which has no tail-size bound in a file — to a
-    // fixed path, so the comparison machinery (or the judge) can read
-    // it without hand-parsing log tails. Overwritten per run; the
-    // stdout line and its format are unchanged.
+    // The stamp goes to a file first, with the FULL per-query map (no
+    // tail-size bound there; VERDICT r21 #1), then to stdout as the
+    // LAST line, after the session has stopped: the forked run writes
+    // straight to stdout (`run / outputStrategy` in build.sbt, no
+    // `[info] ` prefix) and nothing follows it on stderr, so the last
+    // line of a log tail parses as JSON. Format unchanged.
     try {
       val stampPath = sys.env.getOrElse("SPARK_GRAFT_STAMP", "BENCH_STAMP.json")
       java.nio.file.Files.write(java.nio.file.Paths.get(stampPath),
@@ -367,5 +364,6 @@ object Bench {
       System.err.println(s"[bench-ref] wrote reference ($p, ${qs.size} queries)")
     }
     spark.stop()
+    println(stampJson(stamped))
   }
 }

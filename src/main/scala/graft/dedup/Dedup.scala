@@ -1,7 +1,12 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftglue.Glue
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 import graft.functions.GraftFunctions
 import graft.text.TextOps
 
@@ -360,49 +365,58 @@ object Dedup {
       .select("doc_id", "span_start", "span_end", "n_windows")
   }
 
-  /** Connected components over a near-dup pair list: every doc is
-    * labeled with the smallest doc_id reachable through pairs — the
-    * cluster key for keeper selection (keep `id == cluster`, drop the
-    * rest). Iterative min-label propagation: each round joins labels to
-    * the bidirectional edge list, takes the min over neighbors, and
-    * stops when no label changed — O(diameter) rounds of hash joins,
-    * each a key-partitioned shuffle; near-dup components are tiny, so
-    * the loop converges in a handful of rounds even at corpus scale.
-    * (The driver-side loop carries only the converged/changed COUNT,
-    * never data; each round's labels are localCheckpoint'ed so the
-    * lineage — and with it Catalyst's plan tree — stays ROUND-CONSTANT
-    * instead of growing exponentially with iteration count, the
-    * classic iterative-join trap.) */
+  /** Connected components over a near-dup pair list: every id that
+    * appears in a pair is labeled with the smallest id reachable
+    * through pairs — the cluster key for keeper selection (keep
+    * `id == cluster`, drop the rest). Output `(id bigint, cluster
+    * bigint)`; a pair with a null side is skipped.
+    *
+    * Min-label propagation over RDD state that is partitioned ONCE:
+    * the adjacency lists and every round's labels share one
+    * `HashPartitioner` (sized by the session's
+    * `spark.sql.shuffle.partitions`), so the label ⨝ adjacency and
+    * label ⨝ message joins are narrow and a round is one Spark job —
+    * a single `reduceByKey` shuffle of neighbour-min messages, with the
+    * changed-label count (the only thing the driver keeps) taken from
+    * the round's own checkpoint. The pair plan runs once, inside the
+    * first round's job (its one consumer). The initial label is each
+    * node's min over itself and its neighbours, so a star whose hub is
+    * the smallest id converges in its first round. Rounds still grow
+    * with the graph diameter (O(diameter): a chain of k nodes takes
+    * k − 1 rounds); the log-round large-star/small-star form (Kiveris et
+    * al., SoCC 2014) is the follow-up. Each round's labels are
+    * localCheckpoint'ed so the lineage stays round-constant; the
+    * adjacency and every non-final round are released before
+    * returning. */
   def nearDupClusters(pairs: DataFrame): DataFrame = {
-    val edges = pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
-      .union(pairs.select(col("b_id").as("src"), col("a_id").as("dst")))
-      .distinct().localCheckpoint()
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("cluster", col("id")).localCheckpoint()
-    var ckpt = labels
+    val spark = pairs.sparkSession
+    val part = new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    val adj = pairs.select(col("a_id").cast("long"), col("b_id").cast("long"))
+      .na.drop().rdd
+      .flatMap { r => val (a, b) = (r.getLong(0), r.getLong(1)); Iterator(a -> b, b -> a) }
+      .groupByKey(part)
+      .mapValues(_.toArray.distinct)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    var labels: RDD[(Long, Long)] = adj.mapPartitions(
+      _.map { case (id, nbrs) => id -> math.min(id, nbrs.min) }, preservesPartitioning = true)
+    var round: RDD[(Long, (Long, Boolean))] = null
     var changed = 1L
     while (changed > 0) {
-      val viaNeighbors = edges
-        .join(labels.select(col("id").as("dst"), col("cluster").as("nl")), "dst")
-        .groupBy(col("src").as("id")).agg(min(col("nl")).as("min_nbr"))
-      // fused convergence test (r21, guide §2.4): the new label and the
-      // did-it-change flag come out of the SAME left join (changed ⟺
-      // min_nbr < cluster, null-safe: a no-neighbor null never counts),
-      // so the per-round count is a filter over the checkpointed round
-      // output — the previous next⨝labels re-join paid one more
-      // exchange + hash join per round just to recompute that flag.
-      val next = labels.join(viaNeighbors, Seq("id"), "left")
-        .select(col("id"),
-          least(col("cluster"), coalesce(col("min_nbr"), col("cluster"))).as("cluster"),
-          (col("min_nbr") < col("cluster")).as("chg"))
+      val nbrMin = adj.join(labels, part)
+        .flatMap { case (_, (nbrs, l)) => nbrs.iterator.map(_ -> l) }
+        .reduceByKey(part, math.min(_, _))
+      // every id has a neighbour, so the inner join keeps every label
+      val next = labels.join(nbrMin, part)
+        .mapValues { case (l, m) => (math.min(l, m), m < l) }
         .localCheckpoint()
-      changed = next.filter(col("chg")).count()
-      ckpt.unpersist()
-      ckpt = next
-      labels = next.select("id", "cluster")
+      changed = next.filter(_._2._2).count()
+      if (round != null) Glue.dropCheckpoint(round)
+      round = next
+      labels = next.mapValues(_._1)
     }
-    edges.unpersist()
-    labels
+    adj.unpersist(blocking = false)
+    spark.createDataFrame(labels.map { case (id, c) => Row(id, c) },
+      StructType(Seq(StructField("id", LongType), StructField("cluster", LongType))))
   }
 
   /** Scale path for [[embeddingNearDup]]: candidates limited to pairs
@@ -421,7 +435,11 @@ object Dedup {
     * multi-table OR). Low taus are intrinsically weakly selective for
     * sign-LSH (p → 0.5); below τ≈0.5 prefer [[embeddingNearDupIvf]]. */
   def embeddingNearDupLsh(emb: DataFrame, tau: Double,
-      nbits: Int = 0, tables: Int = 0, dim: Int = 64): DataFrame = {
+      nbits: Int = 0, tables: Int = 0, dim: Int = 64): DataFrame =
+    cachedLsh(emb, tau, nbits, tables, dim).pairs
+
+  private def cachedLsh(emb: DataFrame, tau: Double,
+      nbits: Int = 0, tables: Int = 0, dim: Int = 64): CachedPairs = {
     import graft.similarity.Ann
     // persist the slim input BEFORE the auto-sizing count so that scan
     // is the same scan the bucket build reuses — auto mode costs no
@@ -453,7 +471,7 @@ object Dedup {
       posexplode(array((0 until tb).map(t =>
         Ann.bucketCol(col("embedding"), dim, nb, t)): _*)).as(Seq("t", "bucket")))
       .persist()
-    buckets.select(col("t"), col("bucket"),
+    CachedPairs(buckets.select(col("t"), col("bucket"),
         col("vec_id").as("a_id"), col("embedding").as("a_emb"))
       .join(buckets.select(col("t"), col("bucket"),
         col("vec_id").as("b_id"), col("embedding").as("b_emb")),
@@ -462,7 +480,7 @@ object Dedup {
       .withColumn("cos_sim", GraftFunctions.cosineSim(col("a_emb"), col("b_emb")))
       .filter(col("cos_sim") >= tau)
       .dropDuplicates("a_id", "b_id")
-      .select("a_id", "b_id", "cos_sim")
+      .select("a_id", "b_id", "cos_sim"), Seq(buckets, e))
   }
 
   /** IVF-bucketed embedding near-dup — the scale path for LOW taus,
@@ -479,7 +497,11 @@ object Dedup {
     * `Ann.ivfTopK`), and centroids come from a sampled hierarchical
     * k-means instead of literal expressions. */
   def embeddingNearDupIvf(emb: DataFrame, tau: Double,
-      targetListSize: Int = 128, nprobe: Int = 2, lloydRounds: Int = 2): DataFrame = {
+      targetListSize: Int = 128, nprobe: Int = 2, lloydRounds: Int = 2): DataFrame =
+    cachedIvf(emb, tau, targetListSize, nprobe, lloydRounds).pairs
+
+  private def cachedIvf(emb: DataFrame, tau: Double,
+      targetListSize: Int = 128, nprobe: Int = 2, lloydRounds: Int = 2): CachedPairs = {
     import graft.similarity.Ann
     // persisted before the sizing count — the centroid seeding, Lloyd
     // rounds, probe assignment, and list build all reuse this scan
@@ -520,14 +542,15 @@ object Dedup {
         explode(GraftFunctions.topCentroids(
           col("embedding"), Ann.centMatrix(cents), nprobe)).as("cent_id"))
       .persist()
-    lists.select(col("cent_id"), col("vec_id").as("a_id"), col("embedding").as("a_emb"))
+    CachedPairs(lists.select(col("cent_id"), col("vec_id").as("a_id"),
+        col("embedding").as("a_emb"))
       .join(lists.select(col("cent_id"), col("vec_id").as("b_id"),
         col("embedding").as("b_emb")), Seq("cent_id"))
       .filter(col("a_id") < col("b_id"))
       .withColumn("cos_sim", GraftFunctions.cosineSim(col("a_emb"), col("b_emb")))
       .filter(col("cos_sim") >= tau)
       .dropDuplicates("a_id", "b_id")
-      .select("a_id", "b_id", "cos_sim")
+      .select("a_id", "b_id", "cos_sim"), Seq(lists, e))
   }
 
   /** τ-dispatching embedding near-dup — the production entry point.
@@ -550,8 +573,14 @@ object Dedup {
     * the candidate volume of the default 2. */
   def embeddingNearDupAuto(emb: DataFrame, tau: Double,
       ivfNprobe: Int = 2): DataFrame =
-    if (tau <= 0.5) embeddingNearDupIvf(emb, tau, nprobe = ivfNprobe)
-    else embeddingNearDupLsh(emb, tau)
+    cachedEmbeddingNearDup(emb, tau, ivfNprobe).pairs
+
+  /** [[embeddingNearDupAuto]] with the caches its plan reads, for a
+    * caller that consumes the pairs once ([[CachedPairs.consumeOnce]]). */
+  private[graft] def cachedEmbeddingNearDup(emb: DataFrame, tau: Double,
+      ivfNprobe: Int): CachedPairs =
+    if (tau <= 0.5) cachedIvf(emb, tau, nprobe = ivfNprobe)
+    else cachedLsh(emb, tau)
 
   /** Embedding-cosine near-dup pairs at or above `tau` — the exact
     * baseline (oracle-checkable). This compares all id-ordered pairs; at
@@ -596,4 +625,14 @@ object Dedup {
          |         CAST(len(list_intersect(a.sh, b2.sh)) AS DOUBLE) / (len(a.sh) + len(b2.sh) - len(list_intersect(a.sh, b2.sh))) AS jaccard
          |  FROM b a JOIN b b2 ON a.bucket = b2.bucket AND a.doc_id < b2.doc_id)
          |WHERE jaccard >= ${graft.util.DetLn.dlit(tau)}""".stripMargin
+}
+
+/** A lazy pair frame and the persisted intermediates its plan reads.
+  * [[consumeOnce]] hands the frame to its one consumer, which must
+  * materialize what it keeps (as [[Dedup.nearDupClusters]] does), and
+  * then drops those caches — nothing reads them again, so a long-lived
+  * session does not accumulate them. */
+private[graft] final case class CachedPairs(pairs: DataFrame, caches: Seq[DataFrame]) {
+  def consumeOnce[T](consume: DataFrame => T): T =
+    try consume(pairs) finally caches.foreach(_.unpersist(blocking = false))
 }

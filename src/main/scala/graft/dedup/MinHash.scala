@@ -69,27 +69,31 @@ object MinHash {
     * `bands` bands of `numHashes / bands` signature slots. The banded
     * frame is slim (ids + band hash) and persisted so the self-join
     * does not recompute signatures per leg. */
-  def candidatePairs(shingles: DataFrame, numHashes: Int, bands: Int): DataFrame = {
-    val banded = bandTable(shingles, numHashes, bands).persist()
+  def candidatePairs(shingles: DataFrame, numHashes: Int, bands: Int): DataFrame =
+    bandPairs(bandTable(shingles, numHashes, bands).persist())
+
+  private def bandPairs(banded: DataFrame): DataFrame =
     banded.select(col("band"), col("band_hash"), col("doc_id").as("a_id"))
       .join(banded.select(col("band"), col("band_hash"), col("doc_id").as("b_id")),
         Seq("band", "band_hash"))
       .filter(col("a_id") < col("b_id"))
       .dropDuplicates("a_id", "b_id")
       .select("a_id", "b_id")
-  }
 
   /** LSH candidates → exact Jaccard ≥ tau confirm. With the defaults
     * (32 hashes, 8 bands of 4) a true 0.8-Jaccard pair is caught with
     * probability 1 - (1 - 0.8^4)^8 ≈ 0.985. */
   def nearDupPairs(docs: DataFrame, n: Int = 3, numHashes: Int = 32,
-      bands: Int = 8, tau: Double = 0.8): DataFrame = {
-    val s = docs
-      .withColumn("th", tokenHashes(col("text")))
-      .select(col("doc_id"), shinglesFromTokenHashes(col("th"), n).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .persist()
-    Dedup.confirmJaccard(candidatePairs(s, numHashes, bands), s, tau)
+      bands: Int = 8, tau: Double = 0.8): DataFrame =
+    cachedNearDupPairs(docs, n, numHashes, bands, tau).pairs
+
+  /** [[nearDupPairs]] with its shingle and band caches, for a caller
+    * that consumes the pairs once ([[CachedPairs.consumeOnce]]). */
+  private[graft] def cachedNearDupPairs(docs: DataFrame, n: Int,
+      numHashes: Int, bands: Int, tau: Double): CachedPairs = {
+    val s = docShingles(docs, n).persist()
+    val banded = bandTable(s, numHashes, bands).persist()
+    CachedPairs(Dedup.confirmJaccard(bandPairs(banded), s, tau), Seq(banded, s))
   }
 
   /** Paragraph-index bits in the encoded unit id: uid =

@@ -2,8 +2,10 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftglue.Glue
 import org.apache.spark.sql.types._
@@ -88,7 +90,8 @@ case class TokenHashes(child: Expression) extends UnaryExpression {
 
 /** Distinct chained shingle hashes over a token-hash array: shingle i
   * folds th(i..i+n−1) with hashLong(next, hashLong(acc, 42)), first
-  * occurrence kept in position order. */
+  * occurrence kept in position order. A null array yields the empty
+  * array, as the `array_distinct` form did. */
 case class HashShingles(child: Expression, n: Int) extends UnaryExpression {
 
   require(n >= 1, "n must be >= 1")
@@ -101,15 +104,18 @@ case class HashShingles(child: Expression, n: Int) extends UnaryExpression {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
+  override def nullable: Boolean = false
+
   def shinglesOf(arr: ArrayData): ArrayData = {
-    val size = arr.numElements()
+    val size = if (arr == null) 0 else arr.numElements()
     val m = size - n + 1
     if (m <= 0) return new GenericArrayData(Array.empty[Long])
-    // order-preserving primitive dedup: docs are short (m ~ tokens per
-    // doc), so a linear first-occurrence scan over the kept prefix
-    // beats boxing every hash into a java.util set (zero allocation
-    // beyond the output buffer; the kernel runs once per corpus row)
+    // order-preserving primitive dedup: a linear first-occurrence scan
+    // over the kept prefix while it is short (zero allocation beyond
+    // the output buffer — bench docs keep ≤ 161), then an
+    // open-addressing set, so a long document stays O(m), not O(m²)
     val out = new Array[Long](m)
+    var seen: LongHashSet = null
     var kept = 0
     var i = 0
     while (i < m) {
@@ -119,28 +125,67 @@ case class HashShingles(child: Expression, n: Int) extends UnaryExpression {
         acc = XXH64.hashLong(arr.getLong(i + j), XXH64.hashLong(acc, 42L))
         j += 1
       }
-      var p = 0
-      while (p < kept && out(p) != acc) p += 1
-      if (p == kept) { out(kept) = acc; kept += 1 }
+      if (seen == null) {
+        var p = 0
+        while (p < kept && out(p) != acc) p += 1
+        if (p == kept) {
+          out(kept) = acc; kept += 1
+          if (kept == HashShingles.ScanLimit) {
+            seen = new LongHashSet(m)
+            p = 0
+            while (p < kept) { seen.add(out(p)); p += 1 }
+          }
+        }
+      } else if (seen.add(acc)) { out(kept) = acc; kept += 1 }
       i += 1
     }
     new GenericArrayData(
       if (kept == m) out else java.util.Arrays.copyOf(out, kept))
   }
 
-  override def nullSafeEval(input: Any): Any =
-    shinglesOf(input.asInstanceOf[ArrayData])
+  override def eval(input: InternalRow): Any =
+    shinglesOf(child.eval(input).asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("hashShingles", this, classOf[HashShingles].getName)
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $ref.shinglesOf($c);")
+    val c = child.genCode(ctx)
+    ev.copy(code = c.code + code"""
+      |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
+      |  $ref.shinglesOf(${c.isNull} ? null : ${c.value});""".stripMargin,
+      isNull = FalseLiteral)
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 
   override def prettyName: String = "hash_shingles"
+}
+
+object HashShingles {
+  /** Kept shingles past which the first-occurrence scan hands over to
+    * a hash set. */
+  val ScanLimit = 256
+}
+
+/** Insert-only open-addressing set of longs sized for `capacity`
+  * elements (linear probing at load ≤ ½; slot value 0 marks empty, so
+  * the key 0 is tracked apart). */
+private[functions] final class LongHashSet(capacity: Int) {
+  private val slots = new Array[Long](Integer.highestOneBit(2 * capacity - 1) << 1)
+  private val shift = 64 - Integer.numberOfTrailingZeros(slots.length)
+  private var hasZero = false
+
+  /** Adds `v`; true when it was not already present. */
+  def add(v: Long): Boolean =
+    if (v == 0L) { val fresh = !hasZero; hasZero = true; fresh }
+    else {
+      val mask = slots.length - 1
+      var i = ((v * 0x9E3779B97F4A7C15L) >>> shift).toInt
+      while (slots(i) != 0L && slots(i) != v) i = (i + 1) & mask
+      val fresh = slots(i) == 0L
+      if (fresh) slots(i) = v
+      fresh
+    }
 }
 
 /** All n-token window strings of a token array, in position order

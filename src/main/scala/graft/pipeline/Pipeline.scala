@@ -1,7 +1,9 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftglue.Glue
 
 /** Training-data pipeline operators beyond the dedup/text groups: the
   * corpus-level transforms between "raw documents" and "training
@@ -351,17 +353,18 @@ object Pipeline {
     // planning-cost rationale (r22, guide §5/§3.3)
     val fpKeepers = fingerprintKeepers(docs, benchmarkSources)
       .localCheckpoint() // feeds the pair join, the label join, and the tail
-    val pairs = MinHash.nearDupPairs(fpKeepers, n = 3, numHashes = 32,
-      bands = 16, tau = tau)
-    val labels = Dedup.nearDupClusters(pairs).withColumnRenamed("id", "doc_id")
+    val labels = MinHash.cachedNearDupPairs(fpKeepers, n = 3, numHashes = 32,
+        bands = 16, tau = tau)
+      .consumeOnce(Dedup.nearDupClusters).withColumnRenamed("id", "doc_id")
     val keepers = fpKeepers.join(labels, Seq("doc_id"), "left")
       .filter(col("cluster").isNull || col("cluster") === col("doc_id"))
       .drop("cluster")
-    // eager materialization so the stage cache can be dropped before
-    // returning — a long-lived library session must not accumulate it
+    // eager materialization so the stage checkpoint can be dropped
+    // before returning — a long-lived library session must not
+    // accumulate it
     val out = manifestTail(docs, keepers, benchmarkSources, n, minQuality)
       .localCheckpoint()
-    fpKeepers.unpersist(blocking = false)
+    releaseCheckpoint(fpKeepers)
     out
   }
 
@@ -391,10 +394,13 @@ object Pipeline {
     * stage caches (the v2 leak, fixed there too). */
   def releaseManifestV3(docs: DataFrame, emb: DataFrame,
       benchmarkSources: Seq[String], n: Int, minQuality: Double,
-      tau: Double = 0.8, cosTau: Double = 0.45): DataFrame =
-    manifestTail(docs, v3Keepers(docs, emb, benchmarkSources, tau, cosTau),
-      benchmarkSources, n, minQuality)
+      tau: Double = 0.8, cosTau: Double = 0.45): DataFrame = {
+    val keepers = v3Keepers(docs, emb, benchmarkSources, tau, cosTau)
+    val out = manifestTail(docs, keepers, benchmarkSources, n, minQuality)
       .localCheckpoint()
+    releaseCheckpoint(keepers)
+    out
+  }
 
   /** The v3 keeper chain (fingerprint → MinHash string near-dup →
     * semantic near-dup), shared by v3/v4 and the v5 paragraph stage.
@@ -407,8 +413,8 @@ object Pipeline {
     // Stage keepers are localCheckpoint'ed, not merely persisted (r22,
     // guide §5 "localCheckpoint is a cheaper way to cut lineage" +
     // §3.3 "planning time itself can become the bottleneck"): the
-    // chain runs ~90 eager executions (band builds, cluster-loop
-    // rounds, Lloyd collects, gauge counts), and with bare persist
+    // chain runs about 30 jobs (band builds, one job per cluster
+    // round, Lloyd collects, gauge counts), and with bare persist
     // every one of them re-analyzed the full upstream logical tree
     // (injectPii → fingerprint window → MinHash signatures → …) plus
     // paid the cache-manager's canonicalized-plan lookups — measured
@@ -420,9 +426,11 @@ object Pipeline {
     // materialization, in-session.
     val fpKeepers = fingerprintKeepers(docs, benchmarkSources)
       .localCheckpoint() // feeds the pair join, the label join, and the next stage
-    val pairs = MinHash.nearDupPairs(fpKeepers, n = 3, numHashes = 32,
-      bands = 16, tau = tau)
-    val strLabels = Dedup.nearDupClusters(pairs).withColumnRenamed("id", "doc_id")
+    // each pair plan runs once, inside its cluster step, which drops
+    // the plan's caches (shingles and bands; IVF input and lists) after
+    val strLabels = MinHash.cachedNearDupPairs(fpKeepers, n = 3,
+        numHashes = 32, bands = 16, tau = tau)
+      .consumeOnce(Dedup.nearDupClusters).withColumnRenamed("id", "doc_id")
     val strKeepers = fpKeepers.join(strLabels, Seq("doc_id"), "left")
       .filter(col("cluster").isNull || col("cluster") === col("doc_id"))
       .drop("cluster")
@@ -431,16 +439,27 @@ object Pipeline {
       .join(strKeepers.select(col("doc_id").as("vec_id")), "vec_id")
     // ivfNprobe=4: recall-first, like the 16×2 banding above — the
     // completeness spec pins recall 1.0 vs all-pairs at this τ
-    val semPairs = Dedup.embeddingNearDupAuto(keeperEmb, cosTau, ivfNprobe = 4)
-    val semLabels = Dedup.nearDupClusters(semPairs).withColumnRenamed("id", "doc_id")
+    val semLabels = Dedup.cachedEmbeddingNearDup(keeperEmb, cosTau, ivfNprobe = 4)
+      .consumeOnce(Dedup.nearDupClusters).withColumnRenamed("id", "doc_id")
     val keepers = strKeepers.join(semLabels, Seq("doc_id"), "left")
       .filter(col("cluster").isNull || col("cluster") === col("doc_id"))
       .drop("cluster")
-      .localCheckpoint() // eager: safe to drop stage caches below
-    fpKeepers.unpersist(blocking = false)
-    strKeepers.unpersist(blocking = false)
+      .localCheckpoint() // eager: safe to drop the stage checkpoints below
+    releaseCheckpoint(fpKeepers)
+    releaseCheckpoint(strKeepers)
     keepers
   }
+
+  /** Drop the blocks of a localCheckpoint'ed stage frame nothing reads
+    * any more. `unpersist` does not reach them: a checkpointed Dataset
+    * is a LogicalRDD over its own RDD, not a cache-manager entry, so
+    * its blocks would otherwise stay until the frame is garbage
+    * collected. */
+  private def releaseCheckpoint(stage: DataFrame): Unit =
+    stage.queryExecution.logical match {
+      case r: LogicalRDD => Glue.dropCheckpoint(r.rdd)
+      case _ =>
+    }
 
   /** PARAGRAPH-grain near-dup strip (r15, VERDICT r14 #8 — the grain
     * between whole-document dedup and ≥k-token span stripping): every
@@ -497,6 +516,7 @@ object Pipeline {
       .join(stripped.select(col("doc_id"), col("n_para_stripped")), "doc_id")
       .localCheckpoint()
     stripped.unpersist(blocking = false)
+    releaseCheckpoint(keepers)
     out
   }
 

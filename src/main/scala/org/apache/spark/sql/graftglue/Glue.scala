@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.FileStatus
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -12,7 +13,8 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.HadoopFSUtils
 
 /** Narrow glue onto Spark's `private[sql]` surface (Column ↔ Catalyst
-  * Expression, function registration, parquet footer schemas). Lives
+  * Expression, function registration, parquet footer schemas,
+  * checkpoint block release). Lives
   * under `org.apache.spark.sql` for visibility — the standard pattern
   * for Spark extension libraries; everything else in graft stays in
   * public API land.
@@ -33,6 +35,13 @@ object Glue {
     * `InternalRow` RDD, no external `Row`s): jobs over it run in `home`. */
   def rehome(home: SparkSession, batch: DataFrame): DataFrame =
     classic(home).internalCreateDataFrame(batch.queryExecution.toRdd, batch.schema, false)
+
+  /** Drop the blocks of a locally checkpointed RDD that nothing reads
+    * any more. `RDD.unpersist` removes the same blocks but logs a
+    * warning that the truncated lineage cannot be recomputed, which is
+    * the point here. */
+  def dropCheckpoint(rdd: RDD[_]): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
 
   /** True for a name Spark's file listing skips (`_`/`.` prefixed
     * without `=`, `._COPYING_`), except the `_metadata` and

@@ -86,4 +86,34 @@ class ShingleKernelsSpec extends SparkSpec {
       }
     }
   }
+
+  test("hash_shingles past the 256-shingle scan: 50k tokens, duplicate-heavy, empty and null") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    def doc(len: Int, vocab: Int) = Seq.fill(len)(s"w${rnd.nextInt(vocab)}").mkString(" ")
+    val texts: Seq[Option[String]] = Seq(
+      Some(doc(50000, 5000)), // nearly every shingle distinct
+      Some(doc(50000, 12)),   // ≤ 1728 distinct 3-shingles, each ~29 times
+      Some(doc(400, 7)),      // ≤ 343 distinct: repeats on both sides of 256
+      Some(doc(300, 4)),      // ≤ 64 distinct: never leaves the scan
+      Some(""), None)
+    val df = texts.toDF("text").select(hofTokenHashes(col("text")).as("th"))
+    Seq(1, 3).foreach { n =>
+      val rows = df.select(ShingleKernels.hashShingles(col("th"), n).as("a"),
+          hofShingles(col("th"), n).as("b"))
+        .collect()
+      rows.foreach(r => assert(r.getSeq[Long](0) == r.getSeq[Long](1), s"n=$n"))
+      assert(rows.head.getSeq[Long](0).length > (if (n == 1) 4000 else 40000))
+      assert(rows.last.getSeq[Long](0) == Seq.empty, "null input gives the empty array")
+    }
+    // n = 1 keeps the input values themselves: 0 (the set's empty-slot
+    // marker) and negative keys, repeated after the hand-over
+    val arr = (1L to 300L).map(i => if (i % 2 == 0) -i else i) ++
+      Seq(0L, 5L, 0L, -300L, 0L, 301L)
+    val th = Seq(arr).toDF("th")
+    val r = th.select(ShingleKernels.hashShingles(col("th"), 1),
+      hofShingles(col("th"), 1)).head()
+    assert(r.getSeq[Long](0) == r.getSeq[Long](1))
+    assert(r.getSeq[Long](0) == arr.distinct)
+  }
 }
