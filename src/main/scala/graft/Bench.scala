@@ -359,9 +359,13 @@ object Bench {
       // outliers) whenever the env var was set at write time
       val measuredFloor = calibs.reduceOption(_ min _)
       val body = s"""{"calib_ref":${measuredFloor.map(f3).getOrElse("null")},"sf":"$sfDir","queries":${jmap(qs)}}"""
-      java.nio.file.Files.write(java.nio.file.Paths.get(p),
-        body.getBytes("UTF-8"))
-      System.err.println(s"[bench-ref] wrote reference ($p, ${qs.size} queries)")
+      try {
+        java.nio.file.Files.write(java.nio.file.Paths.get(p),
+          body.getBytes("UTF-8"))
+        System.err.println(s"[bench-ref] wrote reference ($p, ${qs.size} queries)")
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench-ref] reference write failed: ${e.getMessage}")
+      }
     }
     spark.stop()
     println(stampJson(stamped))

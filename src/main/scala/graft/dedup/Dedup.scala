@@ -5,7 +5,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftglue.Glue
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 import graft.functions.GraftFunctions
 import graft.text.TextOps
@@ -368,8 +368,10 @@ object Dedup {
   /** Connected components over a near-dup pair list: every id that
     * appears in a pair is labeled with the smallest id reachable
     * through pairs — the cluster key for keeper selection (keep
-    * `id == cluster`, drop the rest). Output `(id bigint, cluster
-    * bigint)`; a pair with a null side is skipped.
+    * `id == cluster`, drop the rest). `a_id` and `b_id` must be
+    * integral (widened to bigint; anything else is rejected); output
+    * `(id bigint, cluster bigint)`, and a pair with a null side is
+    * skipped.
     *
     * Min-label propagation over RDD state that is partitioned ONCE:
     * the adjacency lists and every round's labels share one
@@ -387,9 +389,19 @@ object Dedup {
     * al., SoCC 2014) is the follow-up. Each round's labels are
     * localCheckpoint'ed so the lineage stays round-constant; the
     * adjacency and every non-final round are released before
-    * returning. */
+    * returning, and the final round, which the output reads, by
+    * `Glue.dropCheckpoint(output)` once the caller has materialized
+    * what it keeps (or by Spark's cleaner when the output is
+    * collected as garbage). */
   def nearDupClusters(pairs: DataFrame): DataFrame = {
     val spark = pairs.sparkSession
+    Seq("a_id", "b_id").foreach { c =>
+      pairs.schema(c).dataType match {
+        case ByteType | ShortType | IntegerType | LongType =>
+        case t => throw new IllegalArgumentException(
+          s"nearDupClusters needs integral pair ids; $c is ${t.sql}")
+      }
+    }
     val part = new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
     val adj = pairs.select(col("a_id").cast("long"), col("b_id").cast("long"))
       .na.drop().rdd
@@ -576,7 +588,7 @@ object Dedup {
     cachedEmbeddingNearDup(emb, tau, ivfNprobe).pairs
 
   /** [[embeddingNearDupAuto]] with the caches its plan reads, for a
-    * caller that consumes the pairs once ([[CachedPairs.consumeOnce]]). */
+    * caller that consumes the pairs once ([[CachedPairs.clusters]]). */
   private[graft] def cachedEmbeddingNearDup(emb: DataFrame, tau: Double,
       ivfNprobe: Int): CachedPairs =
     if (tau <= 0.5) cachedIvf(emb, tau, nprobe = ivfNprobe)
@@ -628,11 +640,11 @@ object Dedup {
 }
 
 /** A lazy pair frame and the persisted intermediates its plan reads.
-  * [[consumeOnce]] hands the frame to its one consumer, which must
-  * materialize what it keeps (as [[Dedup.nearDupClusters]] does), and
-  * then drops those caches — nothing reads them again, so a long-lived
-  * session does not accumulate them. */
+  * [[clusters]] is its one consumer: [[Dedup.nearDupClusters]] reads
+  * the pairs once and materializes its labels, after which nothing
+  * reads the caches, so they are dropped — a long-lived session does
+  * not accumulate them. */
 private[graft] final case class CachedPairs(pairs: DataFrame, caches: Seq[DataFrame]) {
-  def consumeOnce[T](consume: DataFrame => T): T =
-    try consume(pairs) finally caches.foreach(_.unpersist(blocking = false))
+  def clusters: DataFrame =
+    try Dedup.nearDupClusters(pairs) finally caches.foreach(_.unpersist(blocking = false))
 }

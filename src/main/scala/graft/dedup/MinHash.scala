@@ -88,7 +88,7 @@ object MinHash {
     cachedNearDupPairs(docs, n, numHashes, bands, tau).pairs
 
   /** [[nearDupPairs]] with its shingle and band caches, for a caller
-    * that consumes the pairs once ([[CachedPairs.consumeOnce]]). */
+    * that consumes the pairs once ([[CachedPairs.clusters]]). */
   private[graft] def cachedNearDupPairs(docs: DataFrame, n: Int,
       numHashes: Int, bands: Int, tau: Double): CachedPairs = {
     val s = docShingles(docs, n).persist()

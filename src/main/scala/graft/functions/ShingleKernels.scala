@@ -110,12 +110,11 @@ case class HashShingles(child: Expression, n: Int) extends UnaryExpression {
     val size = if (arr == null) 0 else arr.numElements()
     val m = size - n + 1
     if (m <= 0) return new GenericArrayData(Array.empty[Long])
-    // order-preserving primitive dedup: a linear first-occurrence scan
-    // over the kept prefix while it is short (zero allocation beyond
-    // the output buffer — bench docs keep ≤ 161), then an
-    // open-addressing set, so a long document stays O(m), not O(m²)
+    // order-preserving primitive dedup: `out` keeps first occurrences
+    // in position order and an open-addressing set answers "seen?", so
+    // a document costs O(m) whatever its length
     val out = new Array[Long](m)
-    var seen: LongHashSet = null
+    val seen = new LongHashSet(m)
     var kept = 0
     var i = 0
     while (i < m) {
@@ -125,18 +124,7 @@ case class HashShingles(child: Expression, n: Int) extends UnaryExpression {
         acc = XXH64.hashLong(arr.getLong(i + j), XXH64.hashLong(acc, 42L))
         j += 1
       }
-      if (seen == null) {
-        var p = 0
-        while (p < kept && out(p) != acc) p += 1
-        if (p == kept) {
-          out(kept) = acc; kept += 1
-          if (kept == HashShingles.ScanLimit) {
-            seen = new LongHashSet(m)
-            p = 0
-            while (p < kept) { seen.add(out(p)); p += 1 }
-          }
-        }
-      } else if (seen.add(acc)) { out(kept) = acc; kept += 1 }
+      if (seen.add(acc)) { out(kept) = acc; kept += 1 }
       i += 1
     }
     new GenericArrayData(
@@ -159,12 +147,6 @@ case class HashShingles(child: Expression, n: Int) extends UnaryExpression {
     copy(child = newChild)
 
   override def prettyName: String = "hash_shingles"
-}
-
-object HashShingles {
-  /** Kept shingles past which the first-occurrence scan hands over to
-    * a hash set. */
-  val ScanLimit = 256
 }
 
 /** Insert-only open-addressing set of longs sized for `capacity`

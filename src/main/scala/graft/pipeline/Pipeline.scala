@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftglue.Glue
 
@@ -348,14 +347,14 @@ object Pipeline {
     * candidate set loses nothing vs all-pairs at this banding). */
   def releaseManifestV2(docs: DataFrame, benchmarkSources: Seq[String], n: Int,
       minQuality: Double, tau: Double = 0.8): DataFrame = {
-    import graft.dedup.{Dedup, MinHash}
+    import graft.dedup.MinHash
     // checkpointed stage boundary, not bare persist — the v3Keepers
     // planning-cost rationale (r22, guide §5/§3.3)
     val fpKeepers = fingerprintKeepers(docs, benchmarkSources)
       .localCheckpoint() // feeds the pair join, the label join, and the tail
     val labels = MinHash.cachedNearDupPairs(fpKeepers, n = 3, numHashes = 32,
         bands = 16, tau = tau)
-      .consumeOnce(Dedup.nearDupClusters).withColumnRenamed("id", "doc_id")
+      .clusters.withColumnRenamed("id", "doc_id")
     val keepers = fpKeepers.join(labels, Seq("doc_id"), "left")
       .filter(col("cluster").isNull || col("cluster") === col("doc_id"))
       .drop("cluster")
@@ -364,7 +363,7 @@ object Pipeline {
     // accumulate it
     val out = manifestTail(docs, keepers, benchmarkSources, n, minQuality)
       .localCheckpoint()
-    releaseCheckpoint(fpKeepers)
+    Seq(fpKeepers, labels).foreach(Glue.dropCheckpoint)
     out
   }
 
@@ -398,7 +397,7 @@ object Pipeline {
     val keepers = v3Keepers(docs, emb, benchmarkSources, tau, cosTau)
     val out = manifestTail(docs, keepers, benchmarkSources, n, minQuality)
       .localCheckpoint()
-    releaseCheckpoint(keepers)
+    Glue.dropCheckpoint(keepers)
     out
   }
 
@@ -430,7 +429,7 @@ object Pipeline {
     // the plan's caches (shingles and bands; IVF input and lists) after
     val strLabels = MinHash.cachedNearDupPairs(fpKeepers, n = 3,
         numHashes = 32, bands = 16, tau = tau)
-      .consumeOnce(Dedup.nearDupClusters).withColumnRenamed("id", "doc_id")
+      .clusters.withColumnRenamed("id", "doc_id")
     val strKeepers = fpKeepers.join(strLabels, Seq("doc_id"), "left")
       .filter(col("cluster").isNull || col("cluster") === col("doc_id"))
       .drop("cluster")
@@ -440,26 +439,14 @@ object Pipeline {
     // ivfNprobe=4: recall-first, like the 16×2 banding above — the
     // completeness spec pins recall 1.0 vs all-pairs at this τ
     val semLabels = Dedup.cachedEmbeddingNearDup(keeperEmb, cosTau, ivfNprobe = 4)
-      .consumeOnce(Dedup.nearDupClusters).withColumnRenamed("id", "doc_id")
+      .clusters.withColumnRenamed("id", "doc_id")
     val keepers = strKeepers.join(semLabels, Seq("doc_id"), "left")
       .filter(col("cluster").isNull || col("cluster") === col("doc_id"))
       .drop("cluster")
       .localCheckpoint() // eager: safe to drop the stage checkpoints below
-    releaseCheckpoint(fpKeepers)
-    releaseCheckpoint(strKeepers)
+    Seq(fpKeepers, strLabels, strKeepers, semLabels).foreach(Glue.dropCheckpoint)
     keepers
   }
-
-  /** Drop the blocks of a localCheckpoint'ed stage frame nothing reads
-    * any more. `unpersist` does not reach them: a checkpointed Dataset
-    * is a LogicalRDD over its own RDD, not a cache-manager entry, so
-    * its blocks would otherwise stay until the frame is garbage
-    * collected. */
-  private def releaseCheckpoint(stage: DataFrame): Unit =
-    stage.queryExecution.logical match {
-      case r: LogicalRDD => Glue.dropCheckpoint(r.rdd)
-      case _ =>
-    }
 
   /** PARAGRAPH-grain near-dup strip (r15, VERDICT r14 #8 — the grain
     * between whole-document dedup and ≥k-token span stripping): every
@@ -516,7 +503,7 @@ object Pipeline {
       .join(stripped.select(col("doc_id"), col("n_para_stripped")), "doc_id")
       .localCheckpoint()
     stripped.unpersist(blocking = false)
-    releaseCheckpoint(keepers)
+    Glue.dropCheckpoint(keepers)
     out
   }
 

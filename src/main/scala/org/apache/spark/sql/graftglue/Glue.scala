@@ -4,12 +4,15 @@ import org.apache.hadoop.fs.FileStatus
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.OneToOneDependency
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
 import org.apache.spark.util.HadoopFSUtils
 
 /** Narrow glue onto Spark's `private[sql]` surface (Column ↔ Catalyst
@@ -42,6 +45,27 @@ object Glue {
     * the point here. */
   def dropCheckpoint(rdd: RDD[_]): Unit =
     rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
+
+  /** [[dropCheckpoint]] for the checkpoints a Dataset's rows are read
+    * from: each `LogicalRDD` leaf of its plan, followed through
+    * one-to-one dependencies to the first persisted RDD. That is the
+    * RDD itself for a `localCheckpoint`ed Dataset (not a cache-manager
+    * entry, so `Dataset.unpersist` does not reach its blocks) and the
+    * last round for a frame mapped from a checkpointed RDD
+    * (`Dedup.nearDupClusters`). */
+  def dropCheckpoint(ds: Dataset[_]): Unit =
+    ds.queryExecution.logical.collectLeaves().foreach {
+      case r: LogicalRDD => persistedSource(r.rdd).foreach(dropCheckpoint)
+      case _ =>
+    }
+
+  @scala.annotation.tailrec
+  private def persistedSource(rdd: RDD[_]): Option[RDD[_]] =
+    if (rdd.getStorageLevel != StorageLevel.NONE) Some(rdd)
+    else rdd.dependencies match {
+      case Seq(d: OneToOneDependency[_]) => persistedSource(d.rdd)
+      case _ => None
+    }
 
   /** True for a name Spark's file listing skips (`_`/`.` prefixed
     * without `=`, `._COPYING_`), except the `_metadata` and

@@ -96,6 +96,15 @@ class ClusterSpec extends SparkSpec {
     assert(out.collect().isEmpty)
   }
 
+  test("integral ids of any width are widened to bigint; string ids are rejected") {
+    val ints = Seq((3, 1), (2, 3)).toDF("a_id", "b_id")
+    assert(Dedup.nearDupClusters(ints).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
+    val strings = Seq(("doc-7", "doc-3")).toDF("a_id", "b_id")
+    val e = intercept[IllegalArgumentException](Dedup.nearDupClusters(strings))
+    assert(e.getMessage.contains("a_id is STRING"), e.getMessage)
+  }
+
   test("a chain of 64 nodes is one cluster") {
     val chain = (1L until 64L).map(i => (i + 1, i))
     assert(clusters(chain) == (1L to 64L).map(_ -> 1L).toMap)

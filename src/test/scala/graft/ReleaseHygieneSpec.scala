@@ -1,15 +1,19 @@
 package graft
 
 import org.apache.spark.sql.execution.CacheManager
+import org.apache.spark.sql.graftglue.Glue
 
 import graft.pipeline.Pipeline
 
-/** A corpus release leaves nothing behind in a long-lived session:
-  * after the first `releaseManifestV3` (which may warm up what every
-  * later one reuses), two more leave the cache manager with the same
-  * entries and block storage no larger. A stage cache that outlives
-  * its release — or a cache-manager plan that pins a stage checkpoint —
-  * grows both by a few MB per release. */
+/** A corpus release leaves nothing behind in a long-lived session.
+  * After a first release (which may warm up what every later one
+  * reuses), two more, each with its output's checkpoint dropped, leave
+  * the cache manager with the same entries and no RDD they made still
+  * persisted. A stage cache that outlives its release, or a stage
+  * checkpoint or cluster round nobody drops, fails one check or the
+  * other. Both are exact: every block a release makes is dropped
+  * explicitly, so nothing waits on garbage collection or the cleaner
+  * thread (a collection can only hide a leaked RDD, never invent one). */
 class ReleaseHygieneSpec extends SparkSpec {
 
   private def cacheEntries: Int = {
@@ -18,37 +22,21 @@ class ReleaseHygieneSpec extends SparkSpec {
     f.get(spark.sharedState.cacheManager).asInstanceOf[Seq[_]].length
   }
 
-  /** Storage memory in use once unreferenced blocks are cleaned: a
-    * garbage collection lets Spark's cleaner drop the blocks of RDDs
-    * and broadcasts nothing references, so what is left is held. */
-  private def storageBytes(): Long = {
-    def used = spark.sparkContext.getExecutorMemoryStatus.values
-      .map { case (max, free) => max - free }.sum
-    var last = Long.MaxValue
-    var now = used
-    var tries = 0
-    while (now != last && tries < 20) {
-      System.gc()
-      Thread.sleep(300)
-      last = now
-      now = used
-      tries += 1
-    }
-    now
-  }
-
-  test("three releases leave storage and the cache manager where the first left them") {
+  test("later releases leave the cache manager as the first left it and persist no RDD") {
     val docs = Tables.documents(spark, sfDir)
     val emb = Tables.embeddings(spark, sfDir)
-    def release(): Unit =
-      assert(Pipeline.releaseManifestV3(docs, emb, Seq("src0", "src1"), 4, 0.2)
-        .count() > 0)
+    def release(): Unit = {
+      val out = Pipeline.releaseManifestV3(docs, emb, Seq("src0", "src1"), 4, 0.2)
+      assert(out.count() > 0)
+      Glue.dropCheckpoint(out)
+    }
     release()
-    val (entries1, bytes1) = (cacheEntries, storageBytes())
+    val entries1 = cacheEntries
+    val mark = spark.sparkContext.emptyRDD[Int].id // RDD ids are sequential
     release()
     release()
-    val (entries3, bytes3) = (cacheEntries, storageBytes())
-    assert(entries3 == entries1, s"cache-manager entries $entries1 -> $entries3")
-    assert(bytes3 <= bytes1, s"storage $bytes1 -> $bytes3 bytes")
+    assert(cacheEntries == entries1, s"cache-manager entries $entries1 -> $cacheEntries")
+    val left = spark.sparkContext.getPersistentRDDs.keys.filter(_ > mark)
+    assert(left.isEmpty, s"RDDs ${left.toSeq.sorted.mkString(", ")} still persisted")
   }
 }

@@ -87,15 +87,15 @@ class ShingleKernelsSpec extends SparkSpec {
     }
   }
 
-  test("hash_shingles past the 256-shingle scan: 50k tokens, duplicate-heavy, empty and null") {
+  test("hash_shingles on long, duplicate-heavy, empty and null inputs: 50k tokens stay linear") {
     import spark.implicits._
     val rnd = new scala.util.Random(7)
     def doc(len: Int, vocab: Int) = Seq.fill(len)(s"w${rnd.nextInt(vocab)}").mkString(" ")
     val texts: Seq[Option[String]] = Seq(
       Some(doc(50000, 5000)), // nearly every shingle distinct
       Some(doc(50000, 12)),   // ≤ 1728 distinct 3-shingles, each ~29 times
-      Some(doc(400, 7)),      // ≤ 343 distinct: repeats on both sides of 256
-      Some(doc(300, 4)),      // ≤ 64 distinct: never leaves the scan
+      Some(doc(400, 7)),      // ≤ 343 distinct, mostly repeats
+      Some(doc(300, 4)),      // ≤ 64 distinct
       Some(""), None)
     val df = texts.toDF("text").select(hofTokenHashes(col("text")).as("th"))
     Seq(1, 3).foreach { n =>
@@ -107,7 +107,7 @@ class ShingleKernelsSpec extends SparkSpec {
       assert(rows.last.getSeq[Long](0) == Seq.empty, "null input gives the empty array")
     }
     // n = 1 keeps the input values themselves: 0 (the set's empty-slot
-    // marker) and negative keys, repeated after the hand-over
+    // marker) and negative keys, each repeated
     val arr = (1L to 300L).map(i => if (i % 2 == 0) -i else i) ++
       Seq(0L, 5L, 0L, -300L, 0L, 301L)
     val th = Seq(arr).toDF("th")
