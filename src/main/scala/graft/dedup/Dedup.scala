@@ -5,7 +5,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftglue.Glue
-import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StructField, StructType}
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 import graft.functions.GraftFunctions
 import graft.text.TextOps
@@ -18,12 +18,13 @@ import graft.text.TextOps
   * shuffle is on bucket keys and the quadratic work is confined to
   * (small) candidate groups.
   *
-  * Caching contract: the multi-use operators in this family (ngram
-  * Jaccard, MinHash, SimHash, LSH ANN) persist their shared
-  * intermediates for the duration of the query; the cache is subject
-  * to LRU eviction, but long-lived sessions that are done with a
-  * result should call `spark.catalog.clearCache()` (as Bench does) or
-  * unpersist via the storage UI to reclaim executor memory eagerly.
+  * Caching contract: the pair operators (ngram Jaccard, containment,
+  * MinHash, embedding IVF/LSH, and their incremental forms)
+  * `localCheckpoint` their shared intermediates, eagerly, one job each:
+  * nothing enters the cache manager, no two jobs of one plan race to
+  * build the same block, and the blocks go when the result is collected
+  * as garbage (Spark's cleaner) or, on the release path, when
+  * [[CachedPairs.clusters]] drops them.
   */
 object Dedup {
 
@@ -169,7 +170,7 @@ object Dedup {
     * the corpus no matter how skewed the shingle distribution is. The
     * bucket self-join ships only (bucket, doc_id) — the shingle sets
     * are attached afterwards by id, so the wide arrays cross the wire
-    * once, not once per candidate row. The shingle table is persisted
+    * once, not once per candidate row. The shingle table is checkpointed
     * for its uses (at warehouse scale it would be a materialized
     * intermediate table instead; the df counts it feeds are additive
     * per ingest batch). maxDf=16 sits above the verify corpus's max
@@ -184,9 +185,9 @@ object Dedup {
     val s = docs
       .withColumn("toks", split(col("text"), " "))
       .select(col("doc_id"), shingleSetFromTokens(col("toks"), n).as("sh"))
-      .persist()
-    // persisted: the bucket frame feeds both sides of the self-join
-    val slim = dfBoundedMinBuckets(s, hotShingleTable(s, maxDf)).persist()
+      .localCheckpoint()
+    // checkpointed: the bucket frame feeds both sides of the self-join
+    val slim = dfBoundedMinBuckets(s, hotShingleTable(s, maxDf)).localCheckpoint()
     val pairs = slim.select(col("bucket"), col("doc_id").as("a_id"))
       .join(slim.select(col("bucket"), col("doc_id").as("b_id")), Seq("bucket"))
       .filter(col("a_id") < col("b_id"))
@@ -216,11 +217,11 @@ object Dedup {
       .withColumn("toks", split(col("text"), " "))
       .select(col("doc_id"), shingleSetFromTokens(col("toks"), n).as("sh"))
       .filter(size(col("sh")) > 0)
-      .persist()
+      .localCheckpoint()
     // rare ascending, then hot ascending, first kMin — join form: hot
     // membership comes from a shingle-keyed join, the per-doc rank from
     // a doc_id-partitioned window over the slim exploded rows
-    val slim = dfBoundedKMinBuckets(s, hotShingleTable(s, maxDf), kMin).persist()
+    val slim = dfBoundedKMinBuckets(s, hotShingleTable(s, maxDf), kMin).localCheckpoint()
     val pairs = slim.select(col("bucket"), col("doc_id").as("a_id"))
       .join(slim.select(col("bucket"), col("doc_id").as("b_id")), Seq("bucket"))
       .filter(col("a_id") < col("b_id"))
@@ -279,11 +280,11 @@ object Dedup {
     def shingles(d: DataFrame) = d
       .withColumn("toks", split(col("text"), " "))
       .select(col("doc_id"), shingleSetFromTokens(col("toks"), n).as("sh"))
-    val oldS = shingles(oldDocs).persist()
-    val newS = shingles(newDocs).persist()
-    val hot = hotIn.persist()
+    val oldS = shingles(oldDocs).localCheckpoint()
+    val newS = shingles(newDocs).localCheckpoint()
+    val hot = hotIn.localCheckpoint()
     val oldIdx = dfBoundedMinBuckets(oldS, hot) // = the persisted snapshot index at scale
-    val newIdx = dfBoundedMinBuckets(newS, hot).persist()
+    val newIdx = dfBoundedMinBuckets(newS, hot).localCheckpoint()
     val vsOld = newIdx.select(col("bucket"), col("doc_id").as("n_id"))
       .join(oldIdx.select(col("bucket"), col("doc_id").as("o_id")), Seq("bucket"))
       .filter(col("n_id") =!= col("o_id")) // disjointness guard: no self-pairs
@@ -395,13 +396,7 @@ object Dedup {
     * collected as garbage). */
   def nearDupClusters(pairs: DataFrame): DataFrame = {
     val spark = pairs.sparkSession
-    Seq("a_id", "b_id").foreach { c =>
-      pairs.schema(c).dataType match {
-        case ByteType | ShortType | IntegerType | LongType =>
-        case t => throw new IllegalArgumentException(
-          s"nearDupClusters needs integral pair ids; $c is ${t.sql}")
-      }
-    }
+    Seq("a_id", "b_id").foreach(integralType(pairs, _, "nearDupClusters"))
     val part = new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
     val adj = pairs.select(col("a_id").cast("long"), col("b_id").cast("long"))
       .na.drop().rdd
@@ -434,12 +429,12 @@ object Dedup {
   /** Scale path for [[embeddingNearDup]]: candidates limited to pairs
     * sharing a hyperplane-LSH bucket in at least one of `tables` tables
     * (the graft.similarity.Ann sketch machinery), then exact cosine
-    * confirms ≥ `tau` inside the join stage. Output ⊆ the exact
+    * confirms ≥ `tau` inside the bucket group. Output ⊆ the exact
     * operator's pairs by construction; recall grows with `tables`
     * (spec-checked in `NewOpsSpec`).
     *
     * Auto-scaling (nbits = 0 / tables = 0): a FIXED bucket count makes
-    * the self-join quadratic in the corpus (bucket occupancy ∝ n, pairs
+    * the pair work quadratic in the corpus (bucket occupancy ∝ n, pairs
     * ∝ occupancy² — measured 100× candidate blowup at 10× data), so
     * auto mode grows `nbits` with log2(n) to pin occupancy ~128, then
     * sizes `tables` for ~0.75 recall at `tau` from the sign-agreement
@@ -453,16 +448,12 @@ object Dedup {
   private def cachedLsh(emb: DataFrame, tau: Double,
       nbits: Int = 0, tables: Int = 0, dim: Int = 64): CachedPairs = {
     import graft.similarity.Ann
-    // persist the slim input BEFORE the auto-sizing count so that scan
-    // is the same scan the bucket build reuses — auto mode costs no
-    // extra corpus pass per invocation
-    val e = emb.select(col("vec_id"), col("embedding")).persist()
+    // checkpointed with its row count: the auto-sizing costs no extra
+    // corpus pass, and the bucket build reads the checkpoint
+    val (e, n) = Glue.localCheckpointCounted(emb.select(col("vec_id"), col("embedding")))
     val nb =
       if (nbits > 0) nbits
-      else {
-        val n = e.count().toDouble
-        math.min(12, math.max(4, math.ceil(math.log(n / 128.0) / math.log(2.0)).toInt))
-      }
+      else math.min(12, math.max(4, math.ceil(math.log(n / 128.0) / math.log(2.0)).toInt))
     val tb =
       if (tables > 0) tables
       else {
@@ -471,28 +462,11 @@ object Dedup {
         math.min(32, math.max(8,
           math.ceil(math.log(0.25) / math.log(1.0 - perTable)).toInt))
       }
-    // Embeddings ride along into the bucket table: the pair blowup then
-    // happens INSIDE the join stage, after the (corpus-sized) exchange,
-    // and cosine confirms each pair in the same codegen stage — only
-    // τ-survivors ever shuffle again. The slim-candidates-then-attach
-    // form is wrong here: at low tau the candidate volume is a large
-    // multiple of the corpus, and attaching arrays by id drags that
-    // multiple through two wide sort-merge joins (measured minutes vs
-    // seconds at 20k vectors).
-    val buckets = e.select(col("vec_id"), col("embedding"),
-      posexplode(array((0 until tb).map(t =>
-        Ann.bucketCol(col("embedding"), dim, nb, t)): _*)).as(Seq("t", "bucket")))
-      .persist()
-    CachedPairs(buckets.select(col("t"), col("bucket"),
-        col("vec_id").as("a_id"), col("embedding").as("a_emb"))
-      .join(buckets.select(col("t"), col("bucket"),
-        col("vec_id").as("b_id"), col("embedding").as("b_emb")),
-        Seq("t", "bucket"))
-      .filter(col("a_id") < col("b_id"))
-      .withColumn("cos_sim", GraftFunctions.cosineSim(col("a_emb"), col("b_emb")))
-      .filter(col("cos_sim") >= tau)
-      .dropDuplicates("a_id", "b_id")
-      .select("a_id", "b_id", "cos_sim"), Seq(buckets, e))
+    // probe key of table t: (t, bucket) as t << 32 | bucket, so keys
+    // order by table first
+    val keys = array((0 until tb).map(t =>
+      lit(t.toLong << 32) + Ann.bucketCol(col("embedding"), dim, nb, t)): _*)
+    CachedPairs(groupedPairs(e, keys, tau), Seq(e))
   }
 
   /** IVF-bucketed embedding near-dup — the scale path for LOW taus,
@@ -501,7 +475,7 @@ object Dedup {
     * the corpus). Candidates are pairs sharing one of their `nprobe`
     * nearest Lloyd-centroid lists; exact cosine confirms ≥ `tau`.
     * List count grows with n (occupancy pinned at ~targetListSize·
-    * nprobe), so the self-join stays linear in the corpus; nprobe > 1
+    * nprobe), so the pair work stays linear in the corpus; nprobe > 1
     * recovers pairs straddling a list boundary. Output ⊆ the exact
     * operator's pairs by construction (recall spec in `NewOpsSpec`).
     * At warehouse scale the list assignment is a write-once
@@ -515,10 +489,9 @@ object Dedup {
   private def cachedIvf(emb: DataFrame, tau: Double,
       targetListSize: Int = 128, nprobe: Int = 2, lloydRounds: Int = 2): CachedPairs = {
     import graft.similarity.Ann
-    // persisted before the sizing count — the centroid seeding, Lloyd
-    // rounds, probe assignment, and list build all reuse this scan
-    val e = emb.select(col("vec_id"), col("embedding")).persist()
-    val n = e.count()
+    // checkpointed with its row count — the centroid seeding, Lloyd
+    // rounds and list build all read this one materialization
+    val (e, n) = Glue.localCheckpointCounted(emb.select(col("vec_id"), col("embedding")))
     // List-count sizing balances the two costs that pull in opposite
     // directions: centroid assignment is n·nCent cosines, within-list
     // pair confirmation is n·occupancy = n²/nCent — the sum is
@@ -541,29 +514,41 @@ object Dedup {
     // literal-array struct-sort form drops out of whole-stage codegen
     // past ~100 centroids and interprets every cosine (~15× slower).
     // List keys are centroid matrix row indices.
-    // same confirm-in-stage shape as the LSH twin: embeddings ride the
-    // (corpus × nprobe)-sized list table, pairs materialize and confirm
-    // inside the join stage, only τ-survivors shuffle on. The list
-    // table comes straight off the persisted scan — assignment and
-    // embedding in ONE Generate (r21, guide §2.4): the previous
-    // slim-assignment frame re-attached embeddings with a vec_id
-    // equi-join, which shuffled the embedding bytes (plus the slim
-    // side) just to recover columns the scan already had in-row.
-    // 2 Exchange + SMJ → 0 below the persist; rows identical.
-    val lists = e.select(col("vec_id"), col("embedding"),
-        explode(GraftFunctions.topCentroids(
-          col("embedding"), Ann.centMatrix(cents), nprobe)).as("cent_id"))
-      .persist()
-    CachedPairs(lists.select(col("cent_id"), col("vec_id").as("a_id"),
-        col("embedding").as("a_emb"))
-      .join(lists.select(col("cent_id"), col("vec_id").as("b_id"),
-        col("embedding").as("b_emb")), Seq("cent_id"))
-      .filter(col("a_id") < col("b_id"))
-      .withColumn("cos_sim", GraftFunctions.cosineSim(col("a_emb"), col("b_emb")))
-      .filter(col("cos_sim") >= tau)
-      .dropDuplicates("a_id", "b_id")
-      .select("a_id", "b_id", "cos_sim"), Seq(lists, e))
+    val keys = GraftFunctions.topCentroids(col("embedding"), Ann.centMatrix(cents), nprobe)
+      .cast("array<bigint>")
+    CachedPairs(groupedPairs(e, keys, tau), Seq(e))
   }
+
+  /** Cosine pairs ≥ `tau` among vectors that share a probe key:
+    * `keys` (array<bigint>, computed from `e`'s columns) are each
+    * vector's probe keys, every vector joins the group of each of its
+    * keys, and [[graft.functions.GroupedCosinePairs]] scores a pair in
+    * the group of the smallest key the two share. Each candidate is
+    * scored once, inside the group that holds it, so no dedup shuffle
+    * follows, and the rows equal the key self-join + `dropDuplicates`
+    * form bit for bit (`GroupedPairsSpec`). Embeddings ride in the
+    * group rows: candidates outnumber the corpus many times over at low
+    * τ, so generating slim id pairs and attaching embeddings by id
+    * after would drag that multiple through two wide joins. `vec_id`
+    * must be an integral key of `e`; the pair ids keep its type. */
+  private[graft] def groupedPairs(e: DataFrame, keys: Column, tau: Double): DataFrame = {
+    val idType = integralType(e, "vec_id", "embedding near-dup")
+    e.select(col("vec_id").cast("long").as("id"), col("embedding").as("emb"),
+        keys.as("keys"))
+      .select(explode(col("keys")).as("key"), struct(col("id"), col("emb"), col("keys")).as("m"))
+      .groupBy("key").agg(collect_list(col("m")).as("ms"))
+      .select(GraftFunctions.groupedCosinePairs(col("key"), col("ms"), tau))
+      .select(col("a_id").cast(idType).as("a_id"), col("b_id").cast(idType).as("b_id"),
+        col("cos_sim"))
+  }
+
+  /** The type of `df`'s column `c`, which must be integral. */
+  private def integralType(df: DataFrame, c: String, op: String): DataType =
+    df.schema(c).dataType match {
+      case t @ (ByteType | ShortType | IntegerType | LongType) => t
+      case t => throw new IllegalArgumentException(
+        s"$op needs integral ids; $c is ${t.sql}")
+    }
 
   /** τ-dispatching embedding near-dup — the production entry point.
     * Sign-LSH's selectivity is intrinsically weak at low τ (the
@@ -575,7 +560,7 @@ object Dedup {
     * count ∝ √n) at ANY τ, so low τ routes there; LSH stays the
     * high-τ path, where few bits are selective and the band build is
     * cheaper than Lloyd rounds. Both branches confirm exact cosine
-    * ≥ τ inside the join stage, so the DISPATCH cannot change which
+    * ≥ τ inside the probe group, so the DISPATCH cannot change which
     * pairs are *eligible* — only which candidates are generated
     * (branch-equivalence spec in `NewOpsSpec`). `ivfNprobe` is the
     * recall knob of the IVF branch: release-time callers (the
@@ -639,12 +624,13 @@ object Dedup {
          |WHERE jaccard >= ${graft.util.DetLn.dlit(tau)}""".stripMargin
 }
 
-/** A lazy pair frame and the persisted intermediates its plan reads.
-  * [[clusters]] is its one consumer: [[Dedup.nearDupClusters]] reads
-  * the pairs once and materializes its labels, after which nothing
-  * reads the caches, so they are dropped — a long-lived session does
-  * not accumulate them. */
+/** A lazy pair frame and the local checkpoints its plan reads (built
+  * once each, eagerly, so no two jobs of the pair plan race to build the
+  * same one). [[clusters]] is its one consumer: [[Dedup.nearDupClusters]]
+  * reads the pairs once and materializes its labels, after which
+  * nothing reads the checkpoints, so their blocks are dropped — a
+  * long-lived session does not accumulate them. */
 private[graft] final case class CachedPairs(pairs: DataFrame, caches: Seq[DataFrame]) {
   def clusters: DataFrame =
-    try Dedup.nearDupClusters(pairs) finally caches.foreach(_.unpersist(blocking = false))
+    try Dedup.nearDupClusters(pairs) finally caches.foreach(Glue.dropCheckpoint)
 }

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * Scale design: the band self-join ships only (band, band_hash,
   * doc_id) — near-dup docs collide, everything else spreads uniformly —
   * and the shingle-hash table is attached by id for the confirm. The
-  * two small intermediates are persisted across their reuses; at
+  * two small intermediates are local checkpoints, built once each; at
   * warehouse scale they'd be materialized intermediate tables.
   */
 object MinHash {
@@ -67,10 +67,10 @@ object MinHash {
 
   /** Candidate (a_id, b_id) pairs: docs agreeing on at least one of
     * `bands` bands of `numHashes / bands` signature slots. The banded
-    * frame is slim (ids + band hash) and persisted so the self-join
+    * frame is slim (ids + band hash) and checkpointed so the self-join
     * does not recompute signatures per leg. */
   def candidatePairs(shingles: DataFrame, numHashes: Int, bands: Int): DataFrame =
-    bandPairs(bandTable(shingles, numHashes, bands).persist())
+    bandPairs(bandTable(shingles, numHashes, bands).localCheckpoint())
 
   private def bandPairs(banded: DataFrame): DataFrame =
     banded.select(col("band"), col("band_hash"), col("doc_id").as("a_id"))
@@ -91,8 +91,8 @@ object MinHash {
     * that consumes the pairs once ([[CachedPairs.clusters]]). */
   private[graft] def cachedNearDupPairs(docs: DataFrame, n: Int,
       numHashes: Int, bands: Int, tau: Double): CachedPairs = {
-    val s = docShingles(docs, n).persist()
-    val banded = bandTable(s, numHashes, bands).persist()
+    val s = docShingles(docs, n).localCheckpoint()
+    val banded = bandTable(s, numHashes, bands).localCheckpoint()
     CachedPairs(Dedup.confirmJaccard(bandPairs(banded), s, tau), Seq(banded, s))
   }
 
@@ -202,9 +202,9 @@ object MinHash {
   private[dedup] def incrementalNearDupPairsWithIndex(oldDocs: DataFrame,
       newDocs: DataFrame, oldIdx: DataFrame, n: Int, numHashes: Int,
       bands: Int, tau: Double): DataFrame = {
-    val oldS = docShingles(oldDocs, n).persist()
-    val newS = docShingles(newDocs, n).persist()
-    val newIdx = bandTable(newS, numHashes, bands).persist()
+    val oldS = docShingles(oldDocs, n).localCheckpoint()
+    val newS = docShingles(newDocs, n).localCheckpoint()
+    val newIdx = bandTable(newS, numHashes, bands).localCheckpoint()
     val vsOld = newIdx.select(col("band"), col("band_hash"), col("doc_id").as("n_id"))
       .join(oldIdx.select(col("band"), col("band_hash"), col("doc_id").as("o_id")),
         Seq("band", "band_hash"))

@@ -98,6 +98,11 @@ object GraftFunctions {
   def l2Distance(a: Column, b: Column): Column =
     Glue.column(L2Distance(Glue.expression(a), Glue.expression(b)))
 
+  /** `grouped_cosine_pairs(key, members, tau)`, a generator of one
+    * probe group's scored pairs — see [[GroupedCosinePairs]]. */
+  def groupedCosinePairs(key: Column, members: Column, tau: Double): Column =
+    Glue.column(GroupedCosinePairs(Glue.expression(key), Glue.expression(members), tau))
+
   /** `top_centroids(emb)` against a constant centroid matrix — see
     * [[TopCentroids]]. */
   def topCentroids(emb: Column, cents: Array[Array[Double]], k: Int): Column =

@@ -355,9 +355,7 @@ object Pipeline {
     val labels = MinHash.cachedNearDupPairs(fpKeepers, n = 3, numHashes = 32,
         bands = 16, tau = tau)
       .clusters.withColumnRenamed("id", "doc_id")
-    val keepers = fpKeepers.join(labels, Seq("doc_id"), "left")
-      .filter(col("cluster").isNull || col("cluster") === col("doc_id"))
-      .drop("cluster")
+    val keepers = clusterKeepers(fpKeepers, labels)
     // eager materialization so the stage checkpoint can be dropped
     // before returning — a long-lived library session must not
     // accumulate it
@@ -430,9 +428,7 @@ object Pipeline {
     val strLabels = MinHash.cachedNearDupPairs(fpKeepers, n = 3,
         numHashes = 32, bands = 16, tau = tau)
       .clusters.withColumnRenamed("id", "doc_id")
-    val strKeepers = fpKeepers.join(strLabels, Seq("doc_id"), "left")
-      .filter(col("cluster").isNull || col("cluster") === col("doc_id"))
-      .drop("cluster")
+    val strKeepers = clusterKeepers(fpKeepers, strLabels)
       .localCheckpoint() // feeds the embedding join and the tail
     val keeperEmb = emb.select(col("vec_id"), col("embedding"))
       .join(strKeepers.select(col("doc_id").as("vec_id")), "vec_id")
@@ -440,13 +436,18 @@ object Pipeline {
     // completeness spec pins recall 1.0 vs all-pairs at this τ
     val semLabels = Dedup.cachedEmbeddingNearDup(keeperEmb, cosTau, ivfNprobe = 4)
       .clusters.withColumnRenamed("id", "doc_id")
-    val keepers = strKeepers.join(semLabels, Seq("doc_id"), "left")
-      .filter(col("cluster").isNull || col("cluster") === col("doc_id"))
-      .drop("cluster")
+    val keepers = clusterKeepers(strKeepers, semLabels)
       .localCheckpoint() // eager: safe to drop the stage checkpoints below
     Seq(fpKeepers, strLabels, strKeepers, semLabels).foreach(Glue.dropCheckpoint)
     keepers
   }
+
+  /** The rows of `docs` that a dedup stage keeps: every doc but those
+    * `labels` (doc_id, cluster) put in a cluster of a smaller doc_id —
+    * a doc in no pair, or the smallest of its cluster, stays. */
+  private def clusterKeepers(docs: DataFrame, labels: DataFrame): DataFrame =
+    docs.join(labels.filter(col("cluster") =!= col("doc_id")).select("doc_id"),
+      Seq("doc_id"), "left_anti")
 
   /** PARAGRAPH-grain near-dup strip (r15, VERDICT r14 #8 — the grain
     * between whole-document dedup and ≥k-token span stripping): every

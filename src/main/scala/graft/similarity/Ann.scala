@@ -635,14 +635,19 @@ object Ann {
     * broadcast-join row explosion: the join + per-vector-argmax form
     * materialized n·nCent rows whose struct-buffered aggregate plans as
     * SortAggregate, which at ×100 (7·10⁸ rows) sort-spilled the disk to
-    * death. Each round is one corpus scan + a (list, dim) mean agg;
-    * only nCentroids × dim doubles come back to the driver per round
-    * (metadata, not data). Empty clusters keep their previous centroid.
-    * A seed shortfall (n < k) is logged — downstream k degrades to n,
-    * which is the correct model (k clusters need k points). Mean
-    * doubles are not bit-pinned across partitionings — an
-    * index-construction detail only; the search re-ranks with exact
-    * cosine inside the probed lists. */
+    * death. Each round is ONE Spark job, the MLlib k-means shape: every
+    * partition sums its rows into per-centroid coordinate arrays, read
+    * straight from the assigned `InternalRow`s, and the partial sums
+    * meet by centroid in one `reduceByKey`; only nCentroids × dim sums
+    * come back to the driver (metadata, not data). Empty clusters keep
+    * their previous centroid. A seed shortfall (n < k) is logged —
+    * downstream k degrades to n, which is the correct model (k clusters
+    * need k points). A partition adds its rows in order, starting from
+    * 0.0, which is what `avg` per (centroid, dim) does, so a
+    * one-partition input gives that form's means bit for bit; across
+    * partitions the merge order is not pinned — an index-construction
+    * detail only; the search re-ranks with exact cosine inside the
+    * probed lists. */
   private[graft] def lloydCentroids(emb: DataFrame, nCentroids: Int,
       rounds: Int): Seq[(Int, Seq[Double])] = {
     def toDoubles(a: Any): Seq[Double] = a.asInstanceOf[scala.collection.Seq[Any]].map {
@@ -657,24 +662,63 @@ object Ann {
     if (cents.size < nCentroids)
       System.err.println(s"[lloydCentroids] seed shortfall: ${cents.size} " +
         s"rows for k=$nCentroids — effective k degrades to ${cents.size}")
+    val k = cents.size
     (0 until rounds).foreach { _ =>
       // fresh assigner per round (the matrix changes every round); at
       // broadcast scale that is one broadcast per Lloyd round — index
       // construction cost, not query cost
       val assign = centroidAssigner(emb.sparkSession, centMatrix(cents))
-      val means = emb
+      val sums = emb
         .select(col("embedding").cast("array<double>").as("e"))
-        .select(assign(col("e"), 1)
-          .getItem(0).as("ci"), posexplode(col("e")).as(Seq("dim", "v")))
-        .groupBy("ci", "dim").agg(avg(col("v")).as("m"))
-        .collect().groupBy(_.getInt(0))
-      cents = cents.zipWithIndex.map { case ((id, old), i) =>
-        id -> means.get(i)
-          .map(rs => rs.sortBy(_.getInt(1)).map(_.getDouble(2)).toSeq)
-          .getOrElse(old)
+        .select(assign(col("e"), 1).getItem(0).as("ci"), col("e"))
+        .queryExecution.toRdd
+        .mapPartitions(centroidSums(k))
+        .reduceByKey(addSums)
+        .collectAsMap()
+      cents = cents.map { case (i, old) =>
+        i -> sums.get(i).map { case (s, c) => s.indices.map(d => s(d) / c(d)) }.getOrElse(old)
       }
     }
     cents
+  }
+
+  /** One partition's per-centroid coordinate sums and counts over
+    * `(ci int, e array<double>)` rows: dense arrays, grown to the
+    * longest vector seen, with a count per coordinate so a null element
+    * counts nowhere (as in `avg`). Emits one entry per centroid that
+    * received a row. */
+  private def centroidSums(k: Int)(rows: Iterator[org.apache.spark.sql.catalyst.InternalRow])
+      : Iterator[(Int, (Array[Double], Array[Long]))] = {
+    val sums = new Array[Array[Double]](k)
+    val counts = new Array[Array[Long]](k)
+    rows.foreach { r =>
+      if (!r.isNullAt(0) && !r.isNullAt(1)) {
+        val c = r.getInt(0); val e = r.getArray(1); val d = e.numElements()
+        if (sums(c) == null || sums(c).length < d) {
+          sums(c) = java.util.Arrays.copyOf(Option(sums(c)).getOrElse(Array.emptyDoubleArray), d)
+          counts(c) = java.util.Arrays.copyOf(Option(counts(c)).getOrElse(Array.emptyLongArray), d)
+        }
+        val (s, n) = (sums(c), counts(c))
+        var i = 0
+        while (i < d) {
+          if (!e.isNullAt(i)) { s(i) += e.getDouble(i); n(i) += 1 }
+          i += 1
+        }
+      }
+    }
+    sums.indices.iterator.filter(sums(_) != null).map(c => c -> (sums(c), counts(c)))
+  }
+
+  /** Merge two partial [[centroidSums]] entries of one centroid. */
+  private def addSums(a: (Array[Double], Array[Long]),
+      b: (Array[Double], Array[Long])): (Array[Double], Array[Long]) = {
+    val (long, short) = if (a._1.length >= b._1.length) (a, b) else (b, a)
+    var i = 0
+    while (i < short._1.length) {
+      long._1(i) += short._1(i); long._2(i) += short._2(i)
+      i += 1
+    }
+    long
   }
 
   /** Per-subspace PQ codebooks on the sliced corpus — the

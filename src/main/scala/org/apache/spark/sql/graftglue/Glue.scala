@@ -8,8 +8,8 @@ import org.apache.spark.OneToOneDependency
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.classic.{Dataset => ClassicDataset, ExpressionUtils}
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
@@ -38,6 +38,20 @@ object Glue {
     * `InternalRow` RDD, no external `Row`s): jobs over it run in `home`. */
   def rehome(home: SparkSession, batch: DataFrame): DataFrame =
     classic(home).internalCreateDataFrame(batch.queryExecution.toRdd, batch.schema, false)
+
+  /** `ds.localCheckpoint()` and its row count, both from the one job
+    * that materializes the checkpoint (a `count()` after it would be a
+    * second job). */
+  def localCheckpointCounted(ds: DataFrame): (DataFrame, Long) = {
+    val d = ds.asInstanceOf[ClassicDataset[_]]
+    val qe = d.queryExecution
+    val (rdd, n) = SQLExecution.withNewExecutionId(qe, Some("localCheckpoint")) {
+      val rdd = qe.executedPlan.execute().map(_.copy()).localCheckpoint()
+      (rdd, rdd.count())
+    }
+    (ClassicDataset.ofRows(classic(ds.sparkSession),
+      LogicalRDD.fromDataset(rdd, d, isStreaming = false)), n)
+  }
 
   /** Drop the blocks of a locally checkpointed RDD that nothing reads
     * any more. `RDD.unpersist` removes the same blocks but logs a
