@@ -178,13 +178,7 @@ object AnnScaleProbe {
     val n = args.headOption.map(_.toLong).getOrElse(100000L)
     val probes = if (args.length > 1) args.drop(1).toSet
       else Set("ivf", "pq", "ivfadc", "quant", "dedup", "cliff")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-ann-scale-probe")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 1 << 20)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     def log(s: String): Unit = println(s"[annscale] $s")
 

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
 /** Benchmark main: times every SparkEntry query end-to-end at
@@ -70,17 +69,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val envRef: Option[Double] =
       sys.env.get("SPARK_GRAFT_CALIB_REF").map(_.toDouble)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS") // events copies must stay INT64 µs (hbasesim + DuckDB read them), never INT96
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 1 << 20) // TopKPairs over corpus-cardinality keys must hash, not sort (see Dedup.embeddingNearDupIvf)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     // JVM + parquet-footer warm-up so per-query times measure the query
     Tables.names.foreach(t => Tables.load(spark, sfDir, t).count())
@@ -138,7 +129,7 @@ object Bench {
     // I/O-path conditions); the BRACKET dirty rule gates on this one.
     def hostProbe(): Double = {
       val t0 = System.nanoTime()
-      spark.range(0L, 200_000_000L, 1L, cpus.toInt)
+      spark.range(0L, 200_000_000L, 1L, spark.sparkContext.defaultParallelism)
         .selectExpr("sum(id)").collect()
       (System.nanoTime() - t0) / 1e9
     }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection diagnostic: `runMain graft.Explain <sfDir> <query>...`
   * prints each named query's formatted physical plan (or a summary line
   * with --summary) — the ".explain and iterate" loop SURVEY §5 demands
@@ -18,13 +16,7 @@ object Explain {
         s"(valid names are SparkEntry.queries keys)")
       sys.exit(2)
     }
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"===== $n")

@@ -5,11 +5,10 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions.{CosineSimilarity, DotProduct, L2Distance}
 
-/** SparkSessionExtensions entry point, so a spark-submit deployment
-  * picks up graft's functions with
-  * `--conf spark.sql.extensions=graft.GraftExtensions`
-  * (or `SparkSession.builder.withExtensions(new GraftExtensions)`).
-  * Programmatic sessions can equivalently call
+/** graft's one SQL function table. Every [[GraftSession]] session
+  * carries it; a spark-submit deployment picks it up with
+  * `--conf spark.sql.extensions=graft.GraftExtensions`, and a session
+  * built elsewhere gets the same functions from
   * `GraftFunctions.register(spark)`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.text.BoolDsl
@@ -27,12 +26,7 @@ object PercProbe {
     // crossover measured in r13
     val ns = (if (args.nonEmpty) args.toSeq
       else Seq("10", "50", "200", "800", "3000", "10000")).map(_.toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     val docs = Tables.documents(spark, sfDir).cache()
     docs.count() // warm

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic bench-scale dataset derivation: replicate an existing
@@ -37,14 +37,7 @@ object ScaleUp {
   def main(args: Array[String]): Unit = {
     val Array(src, dst, f) = args.take(3)
     val factor = f.toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-scaleup")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS") // events copies must stay INT64 µs (hbasesim + DuckDB read them), never INT96
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
 
     // Multi-file output, like any distributed writer at real scale: a
@@ -52,7 +45,7 @@ object ScaleUp {
     // serializes every compute-heavy per-row stage (measured: minhash
     // signatures for the whole corpus on one core) and misrepresents
     // cluster behavior in the bench.
-    val parts = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val parts = spark.sparkContext.defaultParallelism
     def write(name: String, df: DataFrame): Unit = {
       df.repartition(parts).write.mode("overwrite").parquet(s"$dst/$name.parquet")
       println(s"[scaleup] $name done")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.dedup.Dedup
 
@@ -41,14 +41,7 @@ object SkewAudit {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val maxDf = if (args.length > 1) args(1).toLong else 16L
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-skew-audit")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 1 << 20) // TopKPairs over corpus-cardinality keys must hash, not sort (see Dedup.embeddingNearDupIvf)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
 
     val mode = if (args.length > 2) args(2) else "one"

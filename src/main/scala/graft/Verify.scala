@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 import java.nio.file.{Files, Paths}
@@ -64,15 +64,7 @@ object Verify {
     // optional args after the two dirs: run only the named queries
     // (diagnostics; the driver invokes with exactly two args → full suite)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS") // events copies must stay INT64 µs (hbasesim + DuckDB read them), never INT96
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 1 << 20) // TopKPairs over corpus-cardinality keys must hash, not sort (see Dedup.embeddingNearDupIvf)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

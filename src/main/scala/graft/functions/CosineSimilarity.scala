@@ -131,14 +131,11 @@ object GraftFunctions {
       flat, nQ, m, ks))
   }
 
-  /** Register all graft functions so `spark.sql("SELECT cosine_sim(...)")`
+  /** Register [[graft.GraftExtensions]]' functions in a session that
+    * was not built with them, so `spark.sql("SELECT cosine_sim(...)")`
     * works (SURVEY §2: FunctionRegistry registration). */
-  def register(spark: SparkSession): Unit = {
-    Glue.registerFunction(spark, "cosine_sim",
-      es => CosineSimilarity(es.head, es(1)))
-    Glue.registerFunction(spark, "dot_product",
-      es => DotProduct(es.head, es(1)))
-    Glue.registerFunction(spark, "l2_distance",
-      es => L2Distance(es.head, es(1)))
-  }
+  def register(spark: SparkSession): Unit =
+    graft.GraftExtensions.functions.foreach { case (id, _, builder) =>
+      Glue.registerFunction(spark, id.funcName, builder)
+    }
 }

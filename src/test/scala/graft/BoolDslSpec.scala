@@ -145,10 +145,9 @@ class BoolDslSpec extends SparkSpec {
     val (pred, _) = BoolDsl.compile(tree)
     // the scan's metadata string truncates at 100 chars by default —
     // widen so every pushed conjunct is visible to the assertions
-    spark.conf.set("spark.sql.maxMetadataStringLength", "2000")
-    val plan =
-      try docs.filter(pred).queryExecution.executedPlan.toString
-      finally spark.conf.unset("spark.sql.maxMetadataStringLength")
+    val plan = withConf("spark.sql.maxMetadataStringLength" -> "2000") {
+      docs.filter(pred).queryExecution.executedPlan.toString
+    }
     assert(plan.contains("PushedFilters"), plan)
     assert(plan.contains("GreaterThanOrEqual(n_chars,150)"), plan)
     assert(plan.contains("LessThanOrEqual(n_chars,450)"), plan)

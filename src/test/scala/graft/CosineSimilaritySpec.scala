@@ -42,7 +42,6 @@ class CosineSimilaritySpec extends SparkSpec {
   }
 
   test("dot_product matches reference computation and registers in SQL") {
-    GraftFunctions.register(spark)
     val Row(v: Double) = spark.sql(
       "SELECT dot_product(array(1.0D, 2.0D, 3.0D), array(4.0D, 5.0D, 6.0D))").head()
     assert(v == 32.0)
@@ -50,6 +49,17 @@ class CosineSimilaritySpec extends SparkSpec {
     val df = Seq((Array(1.5f, -2.0f), Array(2.0f, 0.5f))).toDF("a", "b")
     val out = df.select(GraftFunctions.dotProduct(col("a"), col("b"))).as[Double].head()
     assert(out == (1.5 * 2.0 + -2.0 * 0.5))
+  }
+
+  test("a GraftSession session resolves the function table without register") {
+    // a new session of the factory's context: its function registry comes
+    // from the extensions alone, none of the `register` calls above
+    val fresh = spark.newSession()
+    val Row(cos: Double, dot: Double, l2: Double) = fresh.sql(
+      "SELECT cosine_sim(array(1.0D, 2.0D), array(2.0D, 4.0D)), " +
+      "dot_product(array(1.0D, 2.0D), array(3.0D, 4.0D)), " +
+      "l2_distance(array(0.0D, 0.0D), array(3.0D, 4.0D))").head()
+    assert(math.abs(cos - 1.0) < 1e-12 && dot == 11.0 && l2 == 5.0)
   }
 
   test("GraftExtensions builders construct the right expressions") {
@@ -66,7 +76,6 @@ class CosineSimilaritySpec extends SparkSpec {
   }
 
   test("null inputs yield null") {
-    GraftFunctions.register(spark)
     val r = spark.sql("SELECT cosine_sim(CAST(NULL AS ARRAY<DOUBLE>), array(1.0D))").head()
     assert(r.isNullAt(0))
   }

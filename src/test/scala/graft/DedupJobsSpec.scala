@@ -62,21 +62,9 @@ class DedupJobsSpec extends SparkSpec {
   }
 
   test("an sf0.001 releaseManifestV3 runs a pinned number of jobs") {
-    // the count depends on session state other suites may leave: a table
-    // they cached turns its scan into a table-cache stage, and a session
-    // without broadcast joins plans sort-merge joins, each one more job.
-    // Count against the bare tables at Spark's default threshold.
+    // a table another suite cached turns its scan into a table-cache
+    // stage, one more job: count against the bare tables
     spark.catalog.clearCache()
-    val threshold = "spark.sql.autoBroadcastJoinThreshold"
-    val saved = spark.conf.getOption(threshold)
-    spark.conf.set(threshold, "10MB")
-    try releaseJobs() finally saved match {
-      case Some(v) => spark.conf.set(threshold, v)
-      case None => spark.conf.unset(threshold)
-    }
-  }
-
-  private def releaseJobs(): Unit = {
     val docs = Tables.documents(spark, sfDir)
     val emb = Tables.embeddings(spark, sfDir)
     def release(): Int = {

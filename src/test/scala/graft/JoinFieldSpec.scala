@@ -44,18 +44,19 @@ class JoinFieldSpec extends SparkSpec {
   }
 
   test("semi-join plan: no row explosion, child predicate at the child scan") {
-    spark.conf.set("spark.sql.maxMetadataStringLength", "2000")
-    val plan = JoinField.hasChildFacet(orders, lineitem, 48.0, 0.05)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("LeftSemi"), plan.take(600))
-    assert(plan.contains("GreaterThanOrEqual(l_quantity,48.0)"),
-      "child predicate must reach the lineitem scan's PushedFilters")
-    val plan2 = JoinField.hasParentFacet(orders, lineitem, 300000.0,
-        "1996-01-01", "1997-01-01")
-      .queryExecution.executedPlan.toString
-    assert(plan2.contains("LeftSemi"))
-    assert(plan2.contains("GreaterThanOrEqual(o_totalprice,300000.0)"),
-      "parent predicate must reach the orders scan's PushedFilters")
+    withConf("spark.sql.maxMetadataStringLength" -> "2000") {
+      val plan = JoinField.hasChildFacet(orders, lineitem, 48.0, 0.05)
+        .queryExecution.executedPlan.toString
+      assert(plan.contains("LeftSemi"), plan.take(600))
+      assert(plan.contains("GreaterThanOrEqual(l_quantity,48.0)"),
+        "child predicate must reach the lineitem scan's PushedFilters")
+      val plan2 = JoinField.hasParentFacet(orders, lineitem, 300000.0,
+          "1996-01-01", "1997-01-01")
+        .queryExecution.executedPlan.toString
+      assert(plan2.contains("LeftSemi"))
+      assert(plan2.contains("GreaterThanOrEqual(o_totalprice,300000.0)"),
+        "parent predicate must reach the orders scan's PushedFilters")
+    }
   }
 
   test("parentIdQuery: exactly one parent's children, predicate pushed " +

@@ -85,11 +85,10 @@ class ParquetReadSpec extends SparkSpec {
     import spark.implicits._
     Seq(1L).toDF("a").write.parquet(s"$root/k=1")
     Seq("x").toDF("b").write.parquet(s"$root/k=2")
-    spark.conf.set("spark.sql.parquet.mergeSchema", "true")
-    try {
+    withConf("spark.sql.parquet.mergeSchema" -> "true") {
       assertSameSchema(root)
       assert(ParquetRead.read(spark, root).schema.fieldNames.toSet == Set("a", "b", "k"))
-    } finally spark.conf.unset("spark.sql.parquet.mergeSchema")
+    }
   }
 
   test("an empty directory and a missing path fail as spark.read.parquet does") {

@@ -11,29 +11,25 @@ import org.apache.spark.sql.functions._
 class ScaleLayoutSpec extends SparkSpec {
 
   test("bucketed fact-fact join plans without a shuffle exchange") {
-    val wh = Files.createTempDirectory("graft-wh").toString
-    val s = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.warehouse.dir", wh)
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1") // force the issue
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    try {
-      Tables.orders(s, sfDir).write.mode("overwrite")
-        .bucketBy(4, "o_orderkey").sortBy("o_orderkey").saveAsTable("orders_b")
-      Tables.lineitem(s, sfDir).write.mode("overwrite")
-        .bucketBy(4, "l_orderkey").sortBy("l_orderkey").saveAsTable("lineitem_b")
-      val joined = s.table("lineitem_b")
-        .join(s.table("orders_b"), col("l_orderkey") === col("o_orderkey"))
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange"), s"bucketed join must not shuffle:\n$plan")
-      assert(joined.count() ==
-        Tables.lineitem(s, sfDir).join(Tables.orders(s, sfDir),
-          col("l_orderkey") === col("o_orderkey")).count())
-    } finally {
-      s.sql("DROP TABLE IF EXISTS orders_b")
-      s.sql("DROP TABLE IF EXISTS lineitem_b")
+    // each table under its own temp path, not in the session's warehouse
+    val dir = Files.createTempDirectory("graft-wh").toString
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") { // force the issue
+      try {
+        Tables.orders(spark, sfDir).write.mode("overwrite").option("path", s"$dir/orders_b")
+          .bucketBy(4, "o_orderkey").sortBy("o_orderkey").saveAsTable("orders_b")
+        Tables.lineitem(spark, sfDir).write.mode("overwrite").option("path", s"$dir/lineitem_b")
+          .bucketBy(4, "l_orderkey").sortBy("l_orderkey").saveAsTable("lineitem_b")
+        val joined = spark.table("lineitem_b")
+          .join(spark.table("orders_b"), col("l_orderkey") === col("o_orderkey"))
+        val plan = joined.queryExecution.executedPlan.toString
+        assert(!plan.contains("Exchange"), s"bucketed join must not shuffle:\n$plan")
+        assert(joined.count() ==
+          Tables.lineitem(spark, sfDir).join(Tables.orders(spark, sfDir),
+            col("l_orderkey") === col("o_orderkey")).count())
+      } finally {
+        spark.sql("DROP TABLE IF EXISTS orders_b")
+        spark.sql("DROP TABLE IF EXISTS lineitem_b")
+      }
     }
   }
 

@@ -1,6 +1,6 @@
 package graft
 
-import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
@@ -12,61 +12,61 @@ import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdat
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for specs. sf0.001 keeps suites fast. */
+import graft.util.JobWindow
+
+/** Shared local SparkSession for specs. sf0.001 keeps suites fast.
+  * The session is shared by every suite in the JVM, so a suite that
+  * leaves its conf changed fails: set conf with [[withConf]]. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   val sfDir = "/root/testdata/sf0.001"
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS") // events copies must stay INT64 µs (hbasesim + DuckDB read them), never INT96
-    .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 1 << 20)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  /** Four cores: the specs' job-count pins assume 4 shuffle partitions. */
+  lazy val spark: SparkSession = GraftSession.local(4)
 
-  /** Jobs started by `body`, and the last physical plan Spark reported
-    * for each SQL execution it ran. The listener bus is asynchronous, so
-    * a marker job on each side of `body` is the handshake: once the
-    * listener has seen a marker job start, every earlier event has been
-    * delivered to it. */
-  protected def observe(body: => Unit): (Int, Seq[SparkPlanInfo]) = {
-    val sc = spark.sparkContext
-    val marker = "graft.spec.handshake"
-    val jobs = new AtomicInteger
-    val plans = new ConcurrentHashMap[Long, SparkPlanInfo]
-    val (started, ended) = (new CountDownLatch(1), new CountDownLatch(1))
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(marker))) match {
-          case Some("start") => started.countDown()
-          case Some(_) => ended.countDown()
-          case None => if (started.getCount == 0) jobs.incrementAndGet(): Unit
-        }
-      override def onOtherEvent(e: SparkListenerEvent): Unit =
-        if (started.getCount == 0) e match {
-          case s: SparkListenerSQLExecutionStart => plans.put(s.executionId, s.sparkPlanInfo)
-          case u: SparkListenerSQLAdaptiveExecutionUpdate => plans.put(u.executionId, u.sparkPlanInfo)
-          case _ =>
-        }
-    }
-    def handshake(phase: String, seen: CountDownLatch): Unit = {
-      sc.setLocalProperty(marker, phase)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(marker, null)
-      assert(seen.await(60, TimeUnit.SECONDS), s"listener missed the $phase marker")
-    }
-    sc.addSparkListener(listener)
-    try {
-      handshake("start", started)
-      body
-      handshake("end", ended)
-    } finally sc.removeSparkListener(listener)
-    (jobs.get, plans.values.asScala.toSeq)
+  private var confAtStart = Map.empty[String, String]
+
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    confAtStart = spark.conf.getAll
   }
 
-  override def afterAll(): Unit = {
-    // session is shared across suites in one JVM; don't stop it here
-    super.afterAll()
+  override def afterAll(): Unit =
+    try {
+      val now = spark.conf.getAll
+      val changed = (confAtStart.keySet ++ now.keySet).toSeq.sorted
+        .filter(k => confAtStart.get(k) != now.get(k))
+      if (changed.nonEmpty) fail("suite left the shared session's conf changed: " +
+        changed.map(k => s"$k ${confAtStart.getOrElse(k, "<unset>")} -> " +
+          now.getOrElse(k, "<unset>")).mkString(", "))
+    } finally super.afterAll()
+
+  /** `body` with the runtime confs `kvs` set; each key gets its earlier
+    * value back afterwards, or is unset if it had none. */
+  protected def withConf[A](kvs: (String, String)*)(body: => A): A = {
+    val before = spark.conf.getAll
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally kvs.foreach { case (k, _) =>
+      before.get(k) match {
+        case Some(v) => spark.conf.set(k, v)
+        case None => spark.conf.unset(k)
+      }
+    }
+  }
+
+  /** Jobs started by `body`, and the last physical plan Spark reported
+    * for each SQL execution it ran (see [[JobWindow.observe]]). */
+  protected def observe(body: => Unit): (Int, Seq[SparkPlanInfo]) = {
+    val jobs = new AtomicInteger
+    val plans = new ConcurrentHashMap[Long, SparkPlanInfo]
+    JobWindow.observe(spark, new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.put(s.executionId, s.sparkPlanInfo)
+        case u: SparkListenerSQLAdaptiveExecutionUpdate => plans.put(u.executionId, u.sparkPlanInfo)
+        case _ =>
+      }
+    })(body)
+    (jobs.get, plans.values.asScala.toSeq)
   }
 }

@@ -313,12 +313,8 @@ class StreamingRiverSpec extends SparkSpec {
 
   test("a partitioned poll writes one file per touched bucket") {
     // without AQE every shuffle runs at the shuffle-partition setting
-    val conf = spark.conf
-    val saved = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
-      .map(k => k -> conf.get(k))
-    conf.set("spark.sql.adaptive.enabled", "false")
-    conf.set("spark.sql.shuffle.partitions", "5")
-    try onePerBucket() finally saved.foreach { case (k, v) => conf.set(k, v) }
+    withConf("spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> "5")(onePerBucket())
   }
 
   private def onePerBucket(): Unit = {

@@ -188,13 +188,11 @@ class TsEncodingSpec extends SparkSpec {
 
   test("hbasesim rejects an INT96 ts instead of decoding it wrong") {
     val dir = Files.createTempDirectory("graft-enc-int96").toString
-    val prev = spark.conf.get("spark.sql.parquet.outputTimestampType")
-    try {
-      spark.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
+    withConf("spark.sql.parquet.outputTimestampType" -> "INT96") {
       base.withColumn("ts", timestamp_micros(col("ts_us"))).drop("ts_us")
         .select("event_id", "ts", "user_id", "event_type", "value", "props")
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
-    } finally spark.conf.set("spark.sql.parquet.outputTimestampType", prev)
+    }
     val e = intercept[Exception] {
       spark.read.format("hbasesim").option("path", s"$dir/events.parquet")
         .load().agg(max(col("ts_us"))).head()
