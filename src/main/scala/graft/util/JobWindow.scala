@@ -6,18 +6,18 @@ import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 
 /** Hands a listener exactly the Spark events one block of driver code
-  * caused: its jobs, stages, tasks and SQL executions, and nothing from
-  * before or after it. */
+  * caused, and nothing from before or after it. */
 object JobWindow {
   private val Marker = "graft.jobwindow.marker"
 
   /** Runs `body` with `listener` attached and returns once the listener
-    * has seen every job, stage, task and other (SQL) event `body`
-    * caused. The listener bus is asynchronous, so a marker job on each
-    * side of `body` is the handshake: the window opens when the bus
-    * delivers the first marker's end and closes when it delivers the
-    * second marker's start, and once a marker event is delivered every
-    * earlier event is too. Neither marker's events reach `listener`. */
+    * has seen every job start and end, stage submission, task end and
+    * other (SQL) event `body` caused. The listener bus is asynchronous,
+    * so a marker job on each side of `body` is the handshake: the window
+    * opens when the bus delivers the first marker's end and closes when
+    * it delivers the second marker's start, and once a marker event is
+    * delivered every earlier event is too. Neither marker's events
+    * reach `listener`. */
   def observe[A](spark: SparkSession, listener: SparkListener)(body: => A): A = {
     val sc = spark.sparkContext
     val (opened, closed) = (new CountDownLatch(1), new CountDownLatch(1))
@@ -35,10 +35,6 @@ object JobWindow {
         else if (open) listener.onJobEnd(e)
       override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
         if (open) listener.onStageSubmitted(e)
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-        if (open) listener.onStageCompleted(e)
-      override def onTaskStart(e: SparkListenerTaskStart): Unit =
-        if (open) listener.onTaskStart(e)
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
         if (open) listener.onTaskEnd(e)
       override def onOtherEvent(e: SparkListenerEvent): Unit =
