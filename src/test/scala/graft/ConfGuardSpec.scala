@@ -21,6 +21,8 @@ class ConfGuardSpec extends SparkSpec {
       val failure = intercept[Exception](leaky.run(None, Args(reporter)).waitUntilCompleted())
       assert(events.exists(_.isInstanceOf[TestSucceeded]), events)
       assert(failure.getMessage.contains(s"$key <unset> -> 2000"), failure)
+      // and it puts the key back, so the suites after it run unchanged
+      assert(spark.conf.getAll.get(key) == before)
     } finally before match {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{AnalysisException, Row}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions
 
@@ -34,11 +35,24 @@ class CosineSimilaritySpec extends SparkSpec {
     assert(math.abs(out(1) + 1.0) < 1e-12)
   }
 
+  private val tableQuery = "SELECT cosine_sim(array(1.0D, 2.0D), array(2.0D, 4.0D)), " +
+    "dot_product(array(1.0D, 2.0D), array(3.0D, 4.0D)), " +
+    "l2_distance(array(0.0D, 0.0D), array(3.0D, 4.0D))"
+
   test("registered as a SQL function") {
-    GraftFunctions.register(spark)
-    val Row(v: Double) = spark.sql(
-      "SELECT cosine_sim(array(1.0D, 2.0D), array(2.0D, 4.0D))").head()
-    assert(math.abs(v - 1.0) < 1e-12)
+    // `register` is the path for a session built without GraftExtensions:
+    // here a fresh session with the factory's functions dropped
+    val s = spark.newSession()
+    val registry = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.functionRegistry
+    val names = GraftExtensions.functions.map(_._1.funcName)
+    names.foreach(n => registry.dropFunction(FunctionIdentifier(n)))
+    names.foreach { n =>
+      intercept[AnalysisException](s.sql(s"SELECT $n(array(1.0D), array(1.0D))").collect())
+    }
+    GraftFunctions.register(s)
+    val Row(cos: Double, dot: Double, l2: Double) = s.sql(tableQuery).head()
+    assert(math.abs(cos - 1.0) < 1e-12 && dot == 11.0 && l2 == 5.0)
   }
 
   test("dot_product matches reference computation and registers in SQL") {
@@ -53,12 +67,9 @@ class CosineSimilaritySpec extends SparkSpec {
 
   test("a GraftSession session resolves the function table without register") {
     // a new session of the factory's context: its function registry comes
-    // from the extensions alone, none of the `register` calls above
+    // from the extensions alone
     val fresh = spark.newSession()
-    val Row(cos: Double, dot: Double, l2: Double) = fresh.sql(
-      "SELECT cosine_sim(array(1.0D, 2.0D), array(2.0D, 4.0D)), " +
-      "dot_product(array(1.0D, 2.0D), array(3.0D, 4.0D)), " +
-      "l2_distance(array(0.0D, 0.0D), array(3.0D, 4.0D))").head()
+    val Row(cos: Double, dot: Double, l2: Double) = fresh.sql(tableQuery).head()
     assert(math.abs(cos - 1.0) < 1e-12 && dot == 11.0 && l2 == 5.0)
   }
 

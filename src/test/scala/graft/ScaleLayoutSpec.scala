@@ -29,6 +29,8 @@ class ScaleLayoutSpec extends SparkSpec {
       } finally {
         spark.sql("DROP TABLE IF EXISTS orders_b")
         spark.sql("DROP TABLE IF EXISTS lineitem_b")
+        // the tables are external: DROP TABLE leaves their files
+        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
       }
     }
   }

@@ -35,9 +35,16 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       val now = spark.conf.getAll
       val changed = (confAtStart.keySet ++ now.keySet).toSeq.sorted
         .filter(k => confAtStart.get(k) != now.get(k))
-      if (changed.nonEmpty) fail("suite left the shared session's conf changed: " +
-        changed.map(k => s"$k ${confAtStart.getOrElse(k, "<unset>")} -> " +
-          now.getOrElse(k, "<unset>")).mkString(", "))
+      if (changed.nonEmpty) {
+        // put the conf back first, so only the leaking suite fails
+        changed.foreach(k => confAtStart.get(k) match {
+          case Some(v) => spark.conf.set(k, v)
+          case None => spark.conf.unset(k)
+        })
+        fail("suite left the shared session's conf changed: " +
+          changed.map(k => s"$k ${confAtStart.getOrElse(k, "<unset>")} -> " +
+            now.getOrElse(k, "<unset>")).mkString(", "))
+      }
     } finally super.afterAll()
 
   /** `body` with the runtime confs `kvs` set; each key gets its earlier
