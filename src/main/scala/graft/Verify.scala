@@ -59,6 +59,26 @@ object Verify {
       s"query '$name' would write oracle-unmirrorable columns: ${bad.mkString("; ")} " +
       "(cast tz-aware timestamps to TIMESTAMP_NTZ in the query, or extend Verify.normalizeOutput)")
   }
+
+  /** `SparkEntry.oracleSql` as the JSON object `main` writes to
+    * `oracle_sql.json`, in the map's iteration order. */
+  def oracleJson: String = {
+    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
+    // — a tab or CR in builder-authored SQL would otherwise make the
+    // driver's json.load fail and silently zero the round's correctness.
+    def q(s: String): String = "\"" + s.flatMap {
+      case '"'  => "\\\""
+      case '\\' => "\\\\"
+      case '\n' => "\\n"
+      case '\r' => "\\r"
+      case '\t' => "\\t"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
+    SparkEntry.oracleSql
+      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+  }
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     // optional args after the two dirs: run only the named queries
@@ -78,21 +98,7 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson)
     spark.stop()
   }
 }

@@ -580,8 +580,9 @@ object Dedup {
     else cachedLsh(emb, tau)
 
   /** Embedding-cosine near-dup pairs at or above `tau` — the exact
-    * baseline (oracle-checkable). This compares all id-ordered pairs; at
-    * 100 TB the same cosine_sim re-rank runs over LSH-bucketed candidates
+    * baseline (oracle-checkable). A zero vector pairs with nothing: its
+    * cosine is NaN, which SQL would order above `tau`. This compares
+    * all id-ordered pairs; at 100 TB the same cosine_sim re-rank runs over LSH-bucketed candidates
     * instead (graft.similarity.Ann.lshTopK machinery), which keeps the
     * join keyed on buckets rather than a cross product. */
   def embeddingNearDup(emb: DataFrame, tau: Double): DataFrame = {
@@ -589,7 +590,7 @@ object Dedup {
     val b = emb.select(col("vec_id").as("b_id"), col("embedding").as("b_emb"))
     a.join(b, col("a_id") < col("b_id"))
       .withColumn("cos_sim", GraftFunctions.cosineSim(col("a_emb"), col("b_emb")))
-      .filter(col("cos_sim") >= tau)
+      .filter(col("cos_sim") >= tau && !isnan(col("cos_sim")))
       .select("a_id", "b_id", "cos_sim")
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
 /** Grouped cosine pair kernel: one probe group of vectors in, its
@@ -26,8 +26,10 @@ import org.apache.spark.sql.types._
   * for bit what `cosine_sim(a.emb, b.emb)` gives. Each member's norm is
   * taken once per group; a pair of different lengths takes both norms
   * over the shorter length, as `cosine_sim` does. A pair is kept when
-  * its score is `>= tau` under SQL ordering, where NaN (a zero vector)
-  * is greater than every number. Members with a null struct or
+  * its score is `>= tau`. A pair with a zero vector scores NaN and is
+  * never kept, though SQL orders NaN above every number: DuckDB's
+  * `list_cosine_similarity` gives such a pair -1, and Elasticsearch
+  * rejects zero vectors for cosine. Members with a null struct or
   * embedding score nothing; ids must be unique among the members.
   *
   * Emits `(a_id, b_id, cos_sim)` lazily, one group's pairs at a time. */
@@ -116,7 +118,7 @@ object GroupedCosinePairs {
             val cos =
               if (a.length == b.length) dot / (rootNorm(i) * rootNorm(j))
               else dot / (math.sqrt(sumSq(a, len)) * math.sqrt(sumSq(b, len)))
-            if (SQLOrderingUtil.compareDoubles(cos, tau) >= 0)
+            if (cos >= tau) // false for NaN
               return new GenericInternalRow(Array[Any](
                 math.min(id(i), id(j)), math.max(id(i), id(j)), cos))
           }

@@ -564,40 +564,15 @@ object Pipeline {
     require(nShards > 0)
     val m = releaseManifestV3(docs, emb, benchmarkSources, n, minQuality, tau, cosTau)
       .select(col("doc_id"), col("n_tok"), col("n_redacted"))
-    val spark = m.sparkSession
-    val nParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val sorted = m
-      .repartitionByRange(nParts, col("n_tok").desc, col("doc_id"))
-      .sortWithinPartitions(col("n_tok").desc, col("doc_id"))
-    val rdd = sorted.rdd.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val partCounts = rdd
-        .mapPartitionsWithIndex((i, it) => Iterator((i, it.size.toLong)))
-        .collect().sortBy(_._1).map(_._2)
-      val offsets = partCounts.scanLeft(0L)(_ + _)
-      val dealt = rdd.mapPartitionsWithIndex { (i, it) =>
-        var rank = offsets(i)
-        it.map { case (id, t, nr) =>
-          rank += 1
-          org.apache.spark.sql.Row(id, t, nr, (rank - 1) % nShards)
-        }
-      }
-      val lt = org.apache.spark.sql.types.LongType
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id", lt, nullable = false),
-        org.apache.spark.sql.types.StructField("n_tok", lt, nullable = false),
-        org.apache.spark.sql.types.StructField("n_redacted", lt, nullable = false),
-        org.apache.spark.sql.types.StructField("shard", lt, nullable = false)))
-      val out = spark.createDataFrame(dealt, schema)
+    withOffsets(m, Seq(col("n_tok").desc, col("doc_id")), weight = None) {
+      _.withColumn("shard", col("offset") % nShards)
         .groupBy("shard")
         .agg(count(lit(1)).as("n_docs"),
           sum(col("n_tok")).as("sum_tok"),
           sum(col("n_redacted")).as("sum_redacted"),
           min(col("doc_id")).as("min_doc"),
           max(col("doc_id")).as("max_doc"))
-      out.localCheckpoint()
-    } finally rdd.unpersist(blocking = false)
+    }
   }
 
   /** Per-domain token-budget capping (the "data mixing" step a corpus
@@ -1415,40 +1390,56 @@ object Pipeline {
     * offsets, steps 1–3 above). Returned localCheckpointed — the RDD
     * lineage's cached parent is released before returning. */
   private def packedOffsets(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    val nParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     // REAL token counts (merges-table BPE, round 11) — a packing run's
     // whole purpose is hitting a context-length budget, and chars/4 or
     // whitespace counts mis-size bins by double-digit percents
     val withTok = docs.select(col("doc_id"),
       graft.text.Bpe.tokenCount(col("text")).as("n_tok"))
-    val sorted = withTok
-      .repartitionByRange(nParts, col("doc_id"))
-      .sortWithinPartitions(col("doc_id"))
-    val rdd = sorted.rdd.map(r => (r.getLong(0), r.getLong(1)))
+    withOffsets(withTok, Seq(col("doc_id")), weight = Some("n_tok"))(
+      _.withColumnRenamed("offset", "start"))
+  }
+
+  /** Two-phase offsets, the global-order pattern of [[packSequences]]
+    * (steps 1–3): `df`, whose columns are all non-null longs, is
+    * range-partitioned and sorted by `order`; each partition's sum of
+    * the `weight` column (its row count when `None`) comes to the
+    * driver, whose exclusive scan gives each partition its start; then
+    * each partition streams its rows once from there. `finish` gets
+    * `df`'s columns plus `offset`, the weight of every row before this
+    * one (with `None`, the row's 0-based global rank), and its result
+    * is returned localCheckpointed. The sorted rows persist across both
+    * jobs, so the two see the same sampled range boundaries, and are
+    * released once the checkpoint is written. */
+  private def withOffsets(df: DataFrame, order: Seq[Column], weight: Option[String])(
+      finish: DataFrame => DataFrame): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val spark = df.sparkSession
+    val nParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val names = df.columns
+    val w = weight.map(names.indexOf(_))
+    val rdd = df.repartitionByRange(nParts, order: _*).sortWithinPartitions(order: _*)
+      .rdd.map(r => Array.tabulate(names.length)(r.getLong))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val partSums = rdd
-        .mapPartitionsWithIndex((i, it) => Iterator((i, it.map(_._2).sum)))
+        .mapPartitionsWithIndex { (i, it) =>
+          Iterator((i, w.fold(it.size.toLong)(c => it.map(_(c)).sum)))
+        }
         .collect().sortBy(_._1).map(_._2)
-      val offsets = partSums.scanLeft(0L)(_ + _)
-      val packed = rdd.mapPartitionsWithIndex { (i, it) =>
-        var cum = offsets(i)
-        it.map { case (id, t) =>
-          val start = cum; cum += t
-          org.apache.spark.sql.Row(id, t, start)
+      val starts = partSums.scanLeft(0L)(_ + _)
+      val rows = rdd.mapPartitionsWithIndex { (i, it) =>
+        var offset = starts(i)
+        it.map { v =>
+          val row = Row.fromSeq((v :+ offset).toSeq)
+          offset += w.fold(1L)(v(_))
+          row
         }
       }
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("n_tok",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("start",
-          org.apache.spark.sql.types.LongType, nullable = false)))
+      val schema = StructType((names :+ "offset").map(StructField(_, LongType, nullable = false)))
       // materialize BEFORE unpersist: the checkpoint action must run
-      // while the packed lineage's cached parent is alive
-      spark.createDataFrame(packed, schema).localCheckpoint()
+      // while the cached sorted rows are alive
+      finish(spark.createDataFrame(rows, schema)).localCheckpoint()
     } finally rdd.unpersist(blocking = false)
   }
 
@@ -2236,41 +2227,15 @@ object Pipeline {
 
   def shardManifest(docs: DataFrame, nShards: Int): DataFrame = {
     require(nShards > 0)
-    val spark = docs.sparkSession
-    val nParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val withTok = docs.select(col("doc_id"),
       graft.text.Bpe.tokenCount(col("text")).as("n_tok"))
-    val sorted = withTok
-      .repartitionByRange(nParts, col("n_tok").desc, col("doc_id"))
-      .sortWithinPartitions(col("n_tok").desc, col("doc_id"))
-    val rdd = sorted.rdd.map(r => (r.getLong(0), r.getLong(1)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val partCounts = rdd
-        .mapPartitionsWithIndex((i, it) => Iterator((i, it.size.toLong)))
-        .collect().sortBy(_._1).map(_._2)
-      val offsets = partCounts.scanLeft(0L)(_ + _)
-      val dealt = rdd.mapPartitionsWithIndex { (i, it) =>
-        var rank = offsets(i)
-        it.map { case (id, t) =>
-          rank += 1
-          org.apache.spark.sql.Row(id, t, (rank - 1) % nShards)
-        }
-      }
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("n_tok",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("shard",
-          org.apache.spark.sql.types.LongType, nullable = false)))
-      val df = spark.createDataFrame(dealt, schema)
-      val out = df.groupBy("shard").agg(
-        count(lit(1)).as("n_docs"),
-        sum(col("n_tok")).as("sum_tok"),
-        max(col("n_tok")).as("max_tok"),
-        min(col("n_tok")).as("min_tok"))
-      out.localCheckpoint()
-    } finally rdd.unpersist(blocking = false)
+    withOffsets(withTok, Seq(col("n_tok").desc, col("doc_id")), weight = None) {
+      _.withColumn("shard", col("offset") % nShards)
+        .groupBy("shard").agg(
+          count(lit(1)).as("n_docs"),
+          sum(col("n_tok")).as("sum_tok"),
+          max(col("n_tok")).as("max_tok"),
+          min(col("n_tok")).as("min_tok"))
+    }
   }
 }

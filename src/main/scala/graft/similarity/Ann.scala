@@ -670,7 +670,9 @@ object Ann {
       val assign = centroidAssigner(emb.sparkSession, centMatrix(cents))
       val sums = emb
         .select(col("embedding").cast("array<double>").as("e"))
-        .select(assign(col("e"), 1).getItem(0).as("ci"), col("e"))
+        // a zero vector has no nearest centroid (NaN cosines): null ci,
+        // which the sums skip
+        .select(get(assign(col("e"), 1), lit(0)).as("ci"), col("e"))
         .queryExecution.toRdd
         .mapPartitions(centroidSums(k))
         .reduceByKey(addSums)

@@ -13,8 +13,8 @@ import graft.similarity.Ann
 /** [[graft.functions.GroupedCosinePairs]] through `Dedup.groupedPairs`:
   * the rows equal the probe-key self-join + `dropDuplicates` form the
   * IVF and LSH near-dup paths used before it, bit for bit, and carry
-  * each pair once. Also: the public pair operators leave no
-  * cache-manager entry behind. */
+  * each pair once; a zero vector pairs with nothing. Also: the public
+  * pair operators leave no cache-manager entry behind. */
 class GroupedPairsSpec extends SparkSpec {
 
   /** The self-join form: every pair sharing a key, deduplicated. */
@@ -25,7 +25,7 @@ class GroupedPairsSpec extends SparkSpec {
         Seq("key"))
       .filter(col("a_id") < col("b_id"))
       .withColumn("cos_sim", GraftFunctions.cosineSim(col("a_emb"), col("b_emb")))
-      .filter(col("cos_sim") >= tau)
+      .filter(col("cos_sim") >= tau && !isnan(col("cos_sim")))
       .dropDuplicates("a_id", "b_id")
       .select("a_id", "b_id", "cos_sim")
   }
@@ -44,7 +44,7 @@ class GroupedPairsSpec extends SparkSpec {
   }
 
   // coordinates from a small integer set: duplicate vectors, zero
-  // vectors (a NaN cosine, which passes `>= tau` in SQL) and exact ties
+  // vectors (a NaN cosine, which pairs with nothing) and exact ties
   // against centroids are common
   private val coord: Gen[Double] = Gen.oneOf(-2.0, -1.0, 0.0, 0.0, 1.0, 2.0, 0.5)
 
@@ -97,6 +97,21 @@ class GroupedPairsSpec extends SparkSpec {
     val want = rows(selfJoinPairs(emb, k, 0.3))
     assert(want.nonEmpty)
     assert(rows(Dedup.embeddingNearDupLsh(emb, 0.3, nbits = 4, tables = 8)).sorted == want.sorted)
+  }
+
+  test("a zero vector pairs with nothing on the exact, IVF and LSH paths") {
+    // two zero vectors and two parallel ones: a pair with a zero side
+    // scores 0/0 = NaN, which SQL orders above every tau, while DuckDB's
+    // oracle scores it -1; the parallel pair shows each path still pairs
+    val x = Seq.tabulate(64)(i => if (i == 0) 1.0 else 0.0)
+    val e = frame(Seq(Seq.fill(64)(0.0), Seq.fill(64)(0.0), x, x.map(_ * 2)), float = false)
+    def pairs(df: DataFrame): Set[(Long, Long)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val want = Set((7L, 10L)) // frame's ids are 1, 4, 7, 10
+    assert(pairs(Dedup.groupedPairs(e, array(lit(0L)), 0.5)) == want, "one key")
+    assert(pairs(Dedup.embeddingNearDup(e, 0.5)) == want, "exact")
+    assert(pairs(Dedup.embeddingNearDupIvf(e, 0.5)) == want, "IVF")
+    assert(pairs(Dedup.embeddingNearDupLsh(e, 0.5, nbits = 1, tables = 8)) == want, "LSH")
   }
 
   private def cacheEntries: Int = {
