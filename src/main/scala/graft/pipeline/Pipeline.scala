@@ -1482,17 +1482,6 @@ object Pipeline {
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("sum_tok"))
   }
 
-  /** Deterministic size-balanced output sharding: docs ranked by (BPE
-    * tokens desc, doc_id) are dealt round-robin into `nShards` training
-    * shards — the classic LPT-flavored deal that lands every shard
-    * within one max-doc of the mean token load, reproducible on any
-    * engine (no RNG, no greedy bin state). The global rank is the
-    * packSequences total-order problem, solved the same two-phase way:
-    * range-partition on the sort key, per-partition counts →
-    * driver-side exclusive scan (metadata), parallel local rank +
-    * offset. Output is the per-shard manifest (doc count, exact token
-    * sum, heaviest/lightest doc) — what a release writes next to the
-    * shard files. */
   // ---------- embedding-space topic clustering (r17, VERDICT r16 #6 /
   // r15 #8 — the "data map" read labs run before fixing a mixture) ----------
 
@@ -2225,6 +2214,17 @@ object Pipeline {
     clusterStats(assigned, minTermCount)
   }
 
+  /** Deterministic size-balanced output sharding: docs ranked by (BPE
+    * tokens desc, doc_id) are dealt round-robin into `nShards` training
+    * shards — the classic LPT-flavored deal that lands every shard
+    * within one max-doc of the mean token load, reproducible on any
+    * engine (no RNG, no greedy bin state). The global rank is the
+    * packSequences total-order problem, solved the same two-phase way:
+    * range-partition on the sort key, per-partition counts →
+    * driver-side exclusive scan (metadata), parallel local rank +
+    * offset. Output is the per-shard manifest (doc count, exact token
+    * sum, heaviest/lightest doc) — what a release writes next to the
+    * shard files. */
   def shardManifest(docs: DataFrame, nShards: Int): DataFrame = {
     require(nShards > 0)
     val withTok = docs.select(col("doc_id"),
