@@ -582,9 +582,10 @@ object Dedup {
   /** Embedding-cosine near-dup pairs at or above `tau` — the exact
     * baseline (oracle-checkable). A zero vector pairs with nothing: its
     * cosine is NaN, which SQL would order above `tau`. This compares
-    * all id-ordered pairs; at 100 TB the same cosine_sim re-rank runs over LSH-bucketed candidates
-    * instead (graft.similarity.Ann.lshTopK machinery), which keeps the
-    * join keyed on buckets rather than a cross product. */
+    * all id-ordered pairs; at 100 TB the same cosine_sim re-rank runs
+    * over LSH-bucketed candidates instead (graft.similarity.Ann.lshTopK
+    * machinery), which keeps the join keyed on buckets rather than a
+    * cross product. */
   def embeddingNearDup(emb: DataFrame, tau: Double): DataFrame = {
     val a = emb.select(col("vec_id").as("a_id"), col("embedding").as("a_emb"))
     val b = emb.select(col("vec_id").as("b_id"), col("embedding").as("b_emb"))
