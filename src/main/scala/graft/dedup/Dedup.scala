@@ -316,7 +316,12 @@ object Dedup {
     * never a self-join, so hot boilerplate cannot go quadratic (no
     * occupancy hazard to bound here). The only windows (Spark-window,
     * not token-window) run per-doc over the FLAGGED rows — sized by
-    * the dup volume, not the corpus. */
+    * the dup volume, not the corpus.
+    *
+    * Bounds: a window's position is below 2²⁰ and 0 ≤ doc_id < 2⁴³
+    * (the two share one BIGINT); a row outside them fails the query
+    * with a `window-position encoding overflow` error, never a wrong
+    * span. */
   def substringDedup(docs: DataFrame, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // (doc_id, pos) rides as ONE bit-packed BIGINT (r22, guide §2.3

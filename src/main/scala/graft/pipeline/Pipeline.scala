@@ -1743,7 +1743,7 @@ object Pipeline {
     val assign = Ann.centroidAssigner(emb.sparkSession, Ann.centMatrix(centroids))
     semPrune(emb.select(col("vec_id"),
       col("embedding").cast("array<double>").as("e"),
-      assign(col("embedding"), 1).getItem(0).as("cluster")), tau)
+      get(assign(col("embedding"), 1), lit(0)).as("cluster")), tau)
   }
 
   /** The DuckDB twin of [[semDedup]] — same frozen centroids, same
@@ -2208,9 +2208,11 @@ object Pipeline {
       return clusterStats(docs.limit(0).withColumn("cluster", lit(0)),
         minTermCount)
     val assign = Ann.centroidAssigner(e.sparkSession, Ann.centMatrix(cents))
+    // a zero embedding has no nearest centroid (null): it is in no topic
     val assigned = docs.join(
       e.select(col("vec_id").as("doc_id"),
-        assign(col("embedding"), 1).getItem(0).as("cluster")), "doc_id")
+        get(assign(col("embedding"), 1), lit(0)).as("cluster"))
+        .filter(col("cluster").isNotNull), "doc_id")
     clusterStats(assigned, minTermCount)
   }
 

@@ -61,6 +61,9 @@ private[graft] object PipelineQueries {
        |    '\b\d{3}-\d{2}-\d{4}\b', '[ID]', 'g')) AS redacted_md5
        |FROM clean""".stripMargin
 
+  // keep2 and sbi are MATERIALIZED: inlined, DuckDB replays the CTE
+  // chain behind sbi (sp, ke, keep2, the string closure) in every
+  // recursive sreach step, and the v3 oracle took over 240 s at sf0.001
   private val manifestPrefixSql: String =
     raw"""WITH RECURSIVE p AS (SELECT doc_id, source,
            |  text || CASE WHEN doc_id % 7 = 0
@@ -85,13 +88,13 @@ private[graft] object PipelineQueries {
            |reach(id, r) AS (SELECT DISTINCT s, s FROM bi
            |  UNION SELECT bi.s, reach.r FROM bi JOIN reach ON bi.d = reach.id),
            |lbl AS (SELECT id, min(r) AS cluster FROM reach GROUP BY id),
-           |keep2 AS (SELECT keep.* FROM keep LEFT JOIN lbl ON keep.doc_id = lbl.id
+           |keep2 AS MATERIALIZED (SELECT keep.* FROM keep LEFT JOIN lbl ON keep.doc_id = lbl.id
            |          WHERE lbl.cluster IS NULL OR lbl.cluster = keep.doc_id),
            |ke AS (SELECT k.doc_id, CAST(e.embedding AS DOUBLE[]) AS emb
            |       FROM keep2 k JOIN embeddings e ON e.vec_id = k.doc_id),
            |sp AS (SELECT a.doc_id AS a_id, b2.doc_id AS b_id FROM ke a JOIN ke b2 ON a.doc_id < b2.doc_id
            |       WHERE list_cosine_similarity(a.emb, b2.emb) >= 0.45),
-           |sbi AS (SELECT a_id AS s, b_id AS d FROM sp UNION SELECT b_id, a_id FROM sp),
+           |sbi AS MATERIALIZED (SELECT a_id AS s, b_id AS d FROM sp UNION SELECT b_id, a_id FROM sp),
            |sreach(id, r) AS (SELECT DISTINCT s, s FROM sbi
            |  UNION SELECT sbi.s, sreach.r FROM sbi JOIN sreach ON sbi.d = sreach.id),
            |slbl AS (SELECT id, min(r) AS cluster FROM sreach GROUP BY id),

@@ -782,7 +782,7 @@ object Ann {
       val rows = emb.select(e64.as("e"))
         .select(posexplode(array((0 until m).map { j =>
           struct(
-            assigns(j)(slice(col("e"), j * sub + 1, sub), 1).getItem(0).as("ci"),
+            get(assigns(j)(slice(col("e"), j * sub + 1, sub), 1), lit(0)).as("ci"),
             slice(col("e"), j * sub + 1, sub).as("se"))
         }: _*)).as(Seq("j", "s")))
         .select(col("j"), col("s.ci").as("ci"),
@@ -794,7 +794,9 @@ object Ann {
         .filter(r => r.getInt(0) == 0 && r.getInt(2) == 0).map(_.getLong(4)).sum)
       val byJ = rows.groupBy(_.getInt(0))
       cbs = (0 until m).map { j =>
-        val means = byJ.getOrElse(j, Array.empty).groupBy(_.getInt(1))
+        // a zero subvector has no nearest entry (null ci): no mean
+        val means = byJ.getOrElse(j, Array.empty).filterNot(_.isNullAt(1))
+          .groupBy(_.getInt(1))
         cbs(j).zipWithIndex.map { case ((id, old), i) =>
           id -> means.get(i)
             .map(rs => rs.sortBy(_.getInt(2)).map(_.getDouble(3)).toSeq)
@@ -812,8 +814,8 @@ object Ann {
   private[graft] def pqEncodeCol(e64: Column,
       cbs: IndexedSeq[Array[Array[Double]]], sub: Int): Column =
     array(cbs.indices.map { j =>
-      coalesce(GraftFunctions.topCentroids(
-        slice(e64, j * sub + 1, sub), cbs(j), 1).getItem(0), lit(0))
+      coalesce(get(GraftFunctions.topCentroids(
+        slice(e64, j * sub + 1, sub), cbs(j), 1), lit(0)), lit(0))
     }: _*)
 
   /** Per-query ADC lookup tables: query-subvector · codebook-entry
@@ -953,7 +955,7 @@ object Ann {
     val assign = centroidAssigner(emb.sparkSession, centMatrix(cents))
     val corpus = emb.select(col("vec_id").as("cand_id"),
       col("embedding").as("c_emb"),
-      assign(col("embedding"), 1).getItem(0).as("cent_id"))
+      get(assign(col("embedding"), 1), lit(0)).as("cent_id"))
     val queries = emb.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
         explode(assign(col("embedding"), nprobe)).as("cent_id"))

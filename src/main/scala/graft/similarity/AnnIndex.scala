@@ -198,7 +198,7 @@ object AnnIndex {
     val cbs = readPqCodebooksV(spark, root, v)
     val base = batchEmb.select(col("vec_id"),
       col("embedding"),
-      assign(col("embedding"), 1).getItem(0).as("cent_id"))
+      get(assign(col("embedding"), 1), lit(0)).as("cent_id"))
     val encoded =
       if (cbs.isEmpty) base
       else base.withColumn("codes", Ann.pqEncodeCol(

@@ -216,20 +216,86 @@ object TextOps {
       .limit(k)
   }
 
+  /** One BM25 field of a doc: its length and a query term's frequency
+    * in it, both exact longs. `s` suffixes the field's per-doc columns
+    * (`dl<s>`, `tf<s><i>`) and its stats columns (`total_toks<s>`,
+    * `df<s><i>`). */
+  private final case class Bm25Field(s: String, dl: Column, tf: String => Column) {
+    def tfCol(i: Int): Column = col(s"tf$s$i")
+    def dfCol(i: Int): Column = col(s"df$s$i")
+    def avgdl: Column = col(s"total_toks$s").cast("double") / col("n_docs")
+  }
+
+  /** The field a token array is: dl = its length, tf = occurrences. */
+  private def tokenField(s: String, toks: Column): Bm25Field =
+    Bm25Field(s, size(toks).cast("long"),
+      t => size(filter(toks, x => x === lit(t))).cast("long"))
+
+  /** The one BM25 program (Lucene's BM25Similarity) behind every BM25
+    * operator, per field f and query term i:
+    *
+    *   idf · (tf·(k1+1)) / (tf + k1·(1 − b + b·dl/avgdl)),
+    *   idf = ln(1 + (N − df + 0.5)/(df + 0.5))
+    *
+    * `perDoc` is one narrow pass over `docs` (doc_id, then each field's
+    * dl and tfs); [[stats]] is its 1-row aggregate (`n_docs`, Σdl and
+    * the dfs per field) plus the named idf columns, each taken through
+    * DetLn: Spark's log() is StrictMath/fdlibm, DuckDB's ln the host
+    * libm, and they differ by one ulp on real idf inputs (r14). The
+    * weight keeps the textual association (idf·num)/denom of the
+    * generated oracles; grouping the division first drifts by one
+    * rounding. Nothing is cached or run before the caller's action: the
+    * stats and the page each scan the corpus once (a 1-row agg, a
+    * bounded TakeOrdered). */
+  private final class Bm25(docs: DataFrame, fields: Seq[Bm25Field],
+      terms: Seq[String], k1: Double, b: Double) {
+    val perDoc: DataFrame = docs.select(col("doc_id") +: fields.flatMap(f =>
+      f.dl.as(s"dl${f.s}") +: terms.zipWithIndex.map { case (t, i) =>
+        f.tf(t).as(s"tf${f.s}$i") }): _*)
+
+    def stats(idfs: Seq[(String, Column)]): DataFrame = {
+      val stats0 = perDoc.agg(count(lit(1)).as("n_docs"),
+        fields.map(f => sum(col(s"dl${f.s}")).as(s"total_toks${f.s}")) ++
+          fields.flatMap(f => terms.indices.map(i =>
+            sum(when(f.tfCol(i) > 0, 1L).otherwise(0L)).as(s"df${f.s}$i"))): _*)
+      idfs.foldLeft(stats0) { case (st, (name, df)) =>
+        st.withColumn(name, graft.util.DetLn.lnExpr(
+          (lit(1) + (col("n_docs") - df + lit(0.5)) / (df + lit(0.5))).cast("double")))
+      }
+    }
+
+    private def denom(f: Bm25Field, i: Int): Column =
+      f.tfCol(i) + lit(k1) * (lit(1 - b) + lit(b) * (col(s"dl${f.s}") / f.avgdl))
+    /** tf·(k1+1) / denom: the saturation × length-norm factor. */
+    def tfPart(f: Bm25Field, i: Int): Column = f.tfCol(i) * lit(k1 + 1) / denom(f, i)
+    def weight(idf: Column, f: Bm25Field, i: Int): Column =
+      idf * (f.tfCol(i) * lit(k1 + 1)) / denom(f, i)
+
+    /** Each term's idf column `idf<s><i>` from its own df in `f`. */
+    def idfs(f: Bm25Field): Seq[(String, Column)] =
+      terms.indices.map(i => s"idf${f.s}$i" -> f.dfCol(i))
+    /** `f`'s score: its weights under [[idfs]], summed in term order. */
+    def fieldScore(f: Bm25Field): Column =
+      terms.indices.map(i => weight(col(s"idf${f.s}$i"), f, i)).reduce(_ + _)
+
+    /** The top-`kTop` docs with some query term in some field, by the
+      * `score` among `cols` desc, doc_id. */
+    def page(stats: DataFrame, cols: Seq[Column], kTop: Int): DataFrame =
+      perDoc.crossJoin(broadcast(stats))
+        .filter(terms.indices.map(i => fields.map(_.tfCol(i) > 0).reduce(_ || _))
+          .reduce(_ || _))
+        .select(cols: _*)
+        .orderBy(col("score").desc, col("doc_id"))
+        .limit(kTop)
+  }
+
   /** BM25 relevance search — ES's default similarity since 5.x (what
     * every ES search user gets without asking; [[matchQuery]] is the
-    * raw-TF form, [[tfidfSearch]] the count-based TF·IDF form). Exact
-    * Lucene-shape formula per query term t:
-    *
-    *   idf(t) · (tf·(k1+1)) / (tf + k1·(1 − b + b·dl/avgdl)),
-    *   idf(t) = ln(1 + (N − df + 0.5)/(df + 0.5))
-    *
-    * with k1=1.2, b=0.75 defaults. All counts (tf, df, dl, N, Σdl) are
+    * raw-TF form, [[tfidfSearch]] the count-based TF·IDF form), with
+    * k1=1.2, b=0.75 defaults. All counts (tf, df, dl, N, Σdl) are
     * exact integers; the score is a FIXED-ORDER double expression over
-    * them (terms summed in argument order), so it is bit-identical
-    * across engines/partitionings — Math.log and DuckDB ln bit-match
-    * on this rational domain (verified over the N/df grid), which is
-    * what makes BM25 oracle-able here where entropy was not.
+    * them (terms summed in argument order, the [[Bm25]] program), so it
+    * is bit-identical across engines/partitionings.
     *
     * Scale shape: per-doc tf columns come from array-filter counts on
     * the token array — ONE narrow corpus scan, no token explode, no
@@ -239,37 +305,10 @@ object TextOps {
   def bm25Search(docs: DataFrame, terms: Seq[String], kTop: Int,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(terms.nonEmpty)
-    val toks = split(lower(col("text")), "\\s+")
-    val perDoc = docs.select(col("doc_id") +: size(toks).cast("long").as("dl") +:
-        terms.zipWithIndex.map { case (t, i) =>
-          size(filter(toks, x => x === lit(t))).cast("long").as(s"tf$i") }: _*)
-    val stats0 = perDoc.agg(
-      count(lit(1)).as("n_docs"),
-      sum(col("dl")).as("total_toks") +: terms.indices.map(i =>
-        sum(when(col(s"tf$i") > 0, 1L).otherwise(0L)).as(s"df$i")): _*)
-    // idf via DetLn on the 1-row stats frame (r14): Spark's log() is
-    // StrictMath/fdlibm, DuckDB's ln the host libm — they differ by
-    // one ulp on real idf inputs, so the whole ln-scoring family runs
-    // on the dual-compiled libm-free program now (the multi_match
-    // migration applied back to its ancestors)
-    val stats = terms.indices.foldLeft(stats0) { (df0, i) =>
-      df0.withColumn(s"idf$i", graft.util.DetLn.lnExpr((lit(1) +
-        (col("n_docs") - col(s"df$i") + lit(0.5)) / (col(s"df$i") + lit(0.5)))
-        .cast("double")))
-    }
-    val avgdl = col("total_toks").cast("double") / col("n_docs")
-    val score = terms.indices.map { i =>
-      col(s"idf$i") * (col(s"tf$i") * lit(k1 + 1)) /
-        (col(s"tf$i") + lit(k1) * (lit(1 - b) + lit(b) * (col("dl") / avgdl)))
-    }.reduce(_ + _)
-    // lazy: nothing is cached or run before the caller's action, so a
-    // long-lived session keeps no corpus-sized frame; the stats and the
-    // page each scan the corpus once (a 1-row agg, a bounded TakeOrdered)
-    perDoc.crossJoin(broadcast(stats))
-      .filter(terms.indices.map(i => col(s"tf$i") > 0).reduce(_ || _))
-      .select(col("doc_id"), col("dl"), score.as("score"))
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(kTop)
+    val f = tokenField("", split(lower(col("text")), "\\s+"))
+    val m = new Bm25(docs, Seq(f), terms, k1, b)
+    m.page(m.stats(m.idfs(f)),
+      Seq(col("doc_id"), col("dl"), m.fieldScore(f).as("score")), kTop)
   }
 
   /** ES `_explain` API (r17, VERDICT r16 #5 / r15 #7 — the relevance-
@@ -280,13 +319,11 @@ object TextOps {
     * factor, and the term's weight — plus the doc-level dl and total
     * score the weights sum to.
     *
-    * Determinism: the SAME program as [[bm25Search]] — DetLn idf, the
-    * weight in bm25Search's exact textual association
-    * (idf × (tf·(k1+1))) / denom so Σ weight IS the page score
-    * bit-for-bit, `tf_part` its own mirrored formula — so the whole
-    * breakdown is HASH-GREEN against the DuckDB twin, not
-    * tolerance-compared (`ExplainSpec` additionally pins
-    * score == Σ weights and page == bm25Search's page).
+    * Determinism: the SAME [[Bm25]] program as [[bm25Search]], so
+    * Σ weight IS the page score bit-for-bit — the whole breakdown is
+    * HASH-GREEN against the DuckDB twin, not tolerance-compared
+    * (`ExplainSpec` additionally pins score == Σ weights and page ==
+    * bm25Search's page).
     *
     * Scale shape: identical to bm25Search up to the bounded top-k page
     * (one corpus scan for tf/dl, a 1-row stats gauge, TakeOrdered);
@@ -296,38 +333,14 @@ object TextOps {
   def bm25Explain(docs: DataFrame, terms: Seq[String], kTop: Int,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(terms.nonEmpty)
-    val toks = split(lower(col("text")), "\\s+")
-    val perDoc = docs.select(col("doc_id") +: size(toks).cast("long").as("dl") +:
-        terms.zipWithIndex.map { case (t, i) =>
-          size(filter(toks, x => x === lit(t))).cast("long").as(s"tf$i") }: _*)
-      .persist()
-    val stats0 = perDoc.agg(
-      count(lit(1)).as("n_docs"),
-      sum(col("dl")).as("total_toks") +: terms.indices.map(i =>
-        sum(when(col(s"tf$i") > 0, 1L).otherwise(0L)).as(s"df$i")): _*)
-    val stats = terms.indices.foldLeft(stats0) { (df0, i) =>
-      df0.withColumn(s"idf$i", graft.util.DetLn.lnExpr((lit(1) +
-        (col("n_docs") - col(s"df$i") + lit(0.5)) / (col(s"df$i") + lit(0.5)))
-        .cast("double")))
-    }
-    val avgdl = col("total_toks").cast("double") / col("n_docs")
-    def denom(i: Int) =
-      col(s"tf$i") + lit(k1) * (lit(1 - b) + lit(b) * (col("dl") / avgdl))
-    // per-term weight in bm25Search's EXACT association order, so the
-    // left-assoc sum reproduces its score bit-for-bit
-    def weight(i: Int) = col(s"idf$i") * (col(s"tf$i") * lit(k1 + 1)) / denom(i)
-    val score = terms.indices.map(weight).reduce(_ + _)
-    val page = perDoc.crossJoin(broadcast(stats))
-      .filter(terms.indices.map(i => col(s"tf$i") > 0).reduce(_ || _))
-      .select(col("doc_id") +: col("dl") +: score.as("score") +:
-        terms.indices.flatMap(i => Seq(
-          col(s"tf$i"), col(s"df$i"), col(s"idf$i"),
-          (col(s"tf$i") * lit(k1 + 1) / denom(i)).as(s"tf_part$i"),
-          weight(i).as(s"w$i"))): _*)
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(kTop)
-      .localCheckpoint()
-    perDoc.unpersist(blocking = false)
+    val f = tokenField("", split(lower(col("text")), "\\s+"))
+    val m = new Bm25(docs, Seq(f), terms, k1, b)
+    val page = m.page(m.stats(m.idfs(f)),
+      col("doc_id") +: col("dl") +: m.fieldScore(f).as("score") +:
+      terms.indices.flatMap(i => Seq(
+        f.tfCol(i), f.dfCol(i), col(s"idf$i"),
+        m.tfPart(f, i).as(s"tf_part$i"),
+        m.weight(col(s"idf$i"), f, i).as(s"w$i"))), kTop)
     // page-sized per-term expansion: one select per term, unioned —
     // kTop × |terms| rows, matched terms only (the ES explain shape)
     terms.zipWithIndex.map { case (t, i) =>
@@ -605,67 +618,18 @@ object TextOps {
     val withFields = docs.select(col("doc_id"),
       slice(toks, 1, titleLen).as("tt"),
       slice(toks, titleLen + 1, Int.MaxValue - titleLen).as("bt"))
-    def tfIn(f: String, t: String) =
-      size(filter(col(f), x => x === lit(t))).cast("long")
-    val perDoc = withFields.select(col("doc_id") +:
-        size(col("tt")).cast("long").as("dlt") +:
-        size(col("bt")).cast("long").as("dlb") +:
-        (terms.zipWithIndex.map { case (t, i) => tfIn("tt", t).as(s"tft$i") } ++
-         terms.zipWithIndex.map { case (t, i) => tfIn("bt", t).as(s"tfb$i") }): _*)
-      .persist()
-    val stats0 = perDoc.agg(
-      count(lit(1)).as("n_docs"),
-      sum(col("dlt")).as("tot_t") +: sum(col("dlb")).as("tot_b") +:
-        (terms.indices.map(i =>
-          sum(when(col(s"tft$i") > 0, 1L).otherwise(0L)).as(s"dft$i")) ++
-         terms.indices.map(i =>
-          sum(when(col(s"tfb$i") > 0, 1L).otherwise(0L)).as(s"dfb$i"))): _*)
-    // idf via the dual-compiled libm-free ln, on the 1-row stats frame
-    def idfArg(dfCol: Column) = lit(1) +
-      (col("n_docs") - dfCol + lit(0.5)) / (dfCol + lit(0.5))
-    val idfKeys: Seq[(String, Column)] = mode match {
-      case "most_fields" =>
-        terms.indices.map(i => s"idf_t$i" -> idfArg(col(s"dft$i"))) ++
-          terms.indices.map(i => s"idf_b$i" -> idfArg(col(s"dfb$i")))
+    val (ft, fb) = (tokenField("_t", col("tt")), tokenField("_b", col("bt")))
+    val m = new Bm25(withFields, Seq(ft, fb), terms, k1, b)
+    val (idfs, score) = mode match {
+      case "most_fields" => (m.idfs(ft) ++ m.idfs(fb),
+        lit(boostTitle) * m.fieldScore(ft) + lit(boostBody) * m.fieldScore(fb))
       case "cross_fields" =>
-        terms.indices.map(i =>
-          s"idf_x$i" -> idfArg(greatest(col(s"dft$i"), col(s"dfb$i"))))
+        def idf(i: Int) = col(s"idf_x$i")
+        (terms.indices.map(i => s"idf_x$i" -> greatest(ft.dfCol(i), fb.dfCol(i))),
+          terms.indices.map(i => greatest(m.weight(idf(i), ft, i), m.weight(idf(i), fb, i)))
+            .reduce(_ + _))
     }
-    val stats = idfKeys.foldLeft(stats0) { case (df0, (name, arg)) =>
-      df0.withColumn(name, graft.util.DetLn.lnExpr(arg.cast("double")))
-    }
-    val avgT = col("tot_t").cast("double") / col("n_docs")
-    val avgB = col("tot_b").cast("double") / col("n_docs")
-    // association mirrors the generated SQL's left-assoc `idf * num
-    // / denom` — (idf·num)/denom, the bm25Search order; grouping the
-    // division first drifts by one rounding (caught by the oracle)
-    def scoreTerm(idfCol: Column, tf: Column, dl: Column, avg: Column) =
-      idfCol * (tf * lit(k1 + 1)) /
-        (tf + lit(k1) * (lit(1 - b) + lit(b) * (dl / avg)))
-    val score = mode match {
-      case "most_fields" =>
-        val sT = terms.indices.map(i => scoreTerm(col(s"idf_t$i"),
-          col(s"tft$i"), col("dlt"), avgT)).reduce(_ + _)
-        val sB = terms.indices.map(i => scoreTerm(col(s"idf_b$i"),
-          col(s"tfb$i"), col("dlb"), avgB)).reduce(_ + _)
-        lit(boostTitle) * sT + lit(boostBody) * sB
-      case "cross_fields" =>
-        terms.indices.map { i =>
-          greatest(
-            scoreTerm(col(s"idf_x$i"), col(s"tft$i"), col("dlt"), avgT),
-            scoreTerm(col(s"idf_x$i"), col(s"tfb$i"), col("dlb"), avgB))
-        }.reduce(_ + _)
-    }
-    val anyHit = terms.indices
-      .map(i => col(s"tft$i") > 0 || col(s"tfb$i") > 0).reduce(_ || _)
-    val out = perDoc.crossJoin(broadcast(stats))
-      .filter(anyHit)
-      .select(col("doc_id"), score.as("score"))
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(kTop)
-      .localCheckpoint()
-    perDoc.unpersist(blocking = false)
-    out
+    m.page(m.stats(idfs), Seq(col("doc_id"), score.as("score")), kTop)
   }
 
   /** The DuckDB twin of [[multiMatchFields]], generated from the same
@@ -775,150 +739,130 @@ object TextOps {
       .select("doc_id", "lex_rank", "sem_rank", "rrf_score")
   }
 
+  /** The significant-terms contingency, Elasticsearch's
+    * `SignificanceHeuristic` quadruple: `(set, term)` token rows
+    * become one row per (set, term) with a = the term's count in the
+    * set (subset freq), b = Σa per term (superset freq), c = Σa per set
+    * (subset size) and d = Σa (superset size), all exact longs; a row
+    * whose set is null is counted in b and d only. b, c and d are
+    * aggregates of the (set, term) counts, so the token rows are
+    * grouped once and AQE reuses that exchange where the branches'
+    * plans agree; nothing is cached or run before the caller's action.
+    * The heuristics below are Columns over a, b, c and d. */
+  private def contingency(tok: DataFrame, set: String): DataFrame = {
+    val a = tok.groupBy(set, "term").agg(count(lit(1)).as("a"))
+    // coalesce: a sum is nullable, a count is not; the outputs keep the
+    // non-null b of the count form
+    def total(name: String) = coalesce(sum("a"), lit(0L)).as(name)
+    a.join(a.groupBy("term").agg(total("b")), "term")
+      .join(broadcast(a.groupBy(set).agg(total("c"))), set)
+      .crossJoin(broadcast(a.agg(total("d"))))
+  }
+
+  private def dbl(c: Column): Column = c.cast("double")
+
+  /** Default lift (a·d)/(b·c): integer products, one double division. */
+  private def sigLift: Column =
+    (col("a") * col("d")).cast("double") / (col("b") * col("c"))
+
+  /** JLH, ES's default scorer: with p_fg = a/c and p_bg = b/d,
+    * (p_fg − p_bg)·(p_fg/p_bg) when the term is over-represented, else
+    * 0. No transcendentals, so oracle parity is exact by construction;
+    * b = 0 cannot occur (b ≥ a ≥ 1). */
+  private def sigJlh: Column = {
+    val pFg = dbl(col("a")) / dbl(col("c"))
+    val pBg = dbl(col("b")) / dbl(col("d"))
+    when(pFg > pBg, (pFg - pBg) * (pFg / pBg)).otherwise(lit(0.0))
+  }
+
+  /** The 2×2 contingency χ² = N·(AD−BC)² / ((A+B)(A+C)(B+D)(C+D)) with
+    * A = a, B = c − a, C = b − a, D = d − b − c + a. Every factor is cast
+    * to double BEFORE multiplying (the 4-way integer product overflows
+    * long at warehouse counts), in the parenthesization the oracles
+    * mirror token for token; the square is x·x, not pow(x,2). A
+    * degenerate margin nulls the score rather than raising ANSI
+    * DIVIDE_BY_ZERO. */
+  private def sigChi2: Column = {
+    val bigA = col("a")
+    val bigB = col("c") - col("a")
+    val bigC = col("b") - col("a")
+    val bigD = col("d") - col("b") - col("c") + col("a")
+    val x = dbl(bigA) * dbl(bigD) - dbl(bigB) * dbl(bigC)
+    val denom = (dbl(bigA + bigB) * dbl(bigA + bigC)) *
+      (dbl(bigB + bigD) * dbl(bigC + bigD))
+    when(denom === 0.0, lit(null).cast("double"))
+      .otherwise(dbl(col("d")) * (x * x) / denom)
+  }
+
+  /** Mutual information: Σ over the four cells of
+    * (n_xy/N)·log₂(n_xy·N / (n_x·n_y)), an empty cell contributing 0.
+    * log₂ is (DetLn(n_xy·N) − DetLn(n_x·n_y)) / Ln2 — the dual-compiled
+    * libm-free ln, split numerator-minus-denominator so both arguments
+    * stay ≥ 1 (DetLn's domain; the products are exact doubles,
+    * ≤ token-count² < 2^53); [[significantMiOracleSql]] generates the
+    * same program. DetLn is the codegen'd kernel expression, not
+    * chained columns: on a data-scale frame CollapseProject merges a
+    * column chain back into one textually-substituted expression
+    * (measured 5×). A zero cell's numerator ln is unused: its term is
+    * `when`-guarded to 0. */
+  private def sigMi: Column = {
+    import graft.util.DetLn
+    val (a, b, c, n) = (col("a"), col("b"), col("c"), col("d"))
+    // cells (count, row marginal, col marginal):
+    //   in-set∧term (a; c, b), in-set∧¬term (c−a; c, d−b),
+    //   other∧term (b−a; d−c, b), other∧¬term (d−b−c+a; d−c, d−b)
+    Seq((a, c, b), (c - a, c, n - b), (b - a, n - c, b),
+        (n - b - c + a, n - c, n - b)).map { case (nxy, nx, ny) =>
+      when(nxy === 0, lit(0.0)).otherwise((dbl(nxy) / dbl(n)) *
+        ((DetLn.lnExpr(dbl(nxy) * dbl(n)) - DetLn.lnExpr(dbl(nx) * dbl(ny))) /
+          lit(DetLn.Ln2)))
+    }.reduce(_ + _)
+  }
+
+  /** `docs`' non-empty lowercase whitespace tokens as (source, term). */
+  private def sourceTokens(docs: DataFrame): DataFrame =
+    docs.select(col("source"), explode(split(lower(col("text")), "\\s+")).as("term"))
+      .filter(col("term") =!= "")
+
+  /** The per-source significant terms under one heuristic: the terms
+    * with at least `minCount` in-source occurrences, top-k by `score`
+    * desc, source, term. */
+  private def bySource(docs: DataFrame, score: String, heuristic: Column,
+      minCount: Long, k: Int): DataFrame =
+    contingency(sourceTokens(docs), "source")
+      .filter(col("a") >= minCount)
+      .withColumn(score, heuristic)
+      .select(col("source"), col("term"), col("a").as("n_in_source"),
+        col("b").as("n_in_corpus"), col(score))
+      .orderBy(col(score).desc, col("source"), col("term"))
+      .limit(k)
+
   /** ES significant-terms facet: terms over-represented in one source
     * vs the whole corpus, scored by exact-count lift
     * (tf_src·total)/(tf_corpus·src_total) — integer products, one
     * double division, deterministic. Candidate terms are floored at
     * `minCount` in-source occurrences. */
-  def significantTerms(docs: DataFrame, minCount: Long, k: Int): DataFrame = {
-    val tok = docs.select(col("source"),
-        explode(split(lower(col("text")), "\\s+")).as("term"))
-      .filter(col("term") =!= "")
-      .persist()
-    val bySrcTerm = tok.groupBy("source", "term").agg(count(lit(1)).as("a"))
-    val byTerm = tok.groupBy("term").agg(count(lit(1)).as("b"))
-    val bySrc = tok.groupBy("source").agg(count(lit(1)).as("c"))
-    val total = tok.agg(count(lit(1)).as("d"))
-    // bounded result materialized eagerly; tokenize cache dropped
-    val out = bySrcTerm
-      .join(byTerm, "term")
-      .join(broadcast(bySrc), "source")
-      .crossJoin(broadcast(total))
-      .filter(col("a") >= minCount)
-      .withColumn("lift", (col("a") * col("d")).cast("double") / (col("b") * col("c")))
-      .select(col("source"), col("term"), col("a").as("n_in_source"),
-        col("b").as("n_in_corpus"), col("lift"))
-      .orderBy(col("lift").desc, col("source"), col("term"))
-      .limit(k)
-      .localCheckpoint()
-    tok.unpersist(blocking = false)
-    out
-  }
+  def significantTerms(docs: DataFrame, minCount: Long, k: Int): DataFrame =
+    bySource(docs, "lift", sigLift, minCount, k)
 
   /** ES significant_terms with the `chi_square` significance heuristic
     * (round 13 — the pluggable-heuristic side of [[significantTerms]],
-    * whose score is ES's default-like lift): the standard 2×2
-    * contingency chi², χ² = N·(AD−BC)² / ((A+B)(A+C)(B+D)(C+D)) with
-    * A = in-source occurrences, B = other in-source tokens, C = the
-    * term elsewhere, D = everything else. All factors cast to double
-    * BEFORE multiplying (the 4-way integer product overflows long at
-    * warehouse counts) in a fixed parenthesization the oracle mirrors
-    * token-for-token; the square is x·x, not pow(x,2) (libm pow is not
-    * guaranteed exactly x² everywhere). A degenerate margin (single
-    * source / term-is-everything) nulls the score rather than raising
-    * ANSI DIVIDE_BY_ZERO. Same plan shape as significantTerms. */
-  def significantTermsChi2(docs: DataFrame, minCount: Long, k: Int): DataFrame = {
-    val tok = docs.select(col("source"),
-        explode(split(lower(col("text")), "\\s+")).as("term"))
-      .filter(col("term") =!= "")
-      .persist()
-    val bySrcTerm = tok.groupBy("source", "term").agg(count(lit(1)).as("a"))
-    val byTerm = tok.groupBy("term").agg(count(lit(1)).as("b"))
-    val bySrc = tok.groupBy("source").agg(count(lit(1)).as("c"))
-    val total = tok.agg(count(lit(1)).as("d"))
-    def d(c: Column) = c.cast("double")
-    val bigA = col("a")
-    val bigB = col("c") - col("a")
-    val bigC = col("b") - col("a")
-    val bigD = col("d") - col("b") - col("c") + col("a")
-    val x = d(bigA) * d(bigD) - d(bigB) * d(bigC)
-    val denom = (d(bigA + bigB) * d(bigA + bigC)) *
-      (d(bigB + bigD) * d(bigC + bigD))
-    val out = bySrcTerm
-      .join(byTerm, "term")
-      .join(broadcast(bySrc), "source")
-      .crossJoin(broadcast(total))
-      .filter(col("a") >= minCount)
-      .withColumn("chi2",
-        when(denom === 0.0, lit(null).cast("double"))
-          .otherwise(d(col("d")) * (x * x) / denom))
-      .select(col("source"), col("term"), col("a").as("n_in_source"),
-        col("b").as("n_in_corpus"), col("chi2"))
-      .orderBy(col("chi2").desc, col("source"), col("term"))
-      .limit(k)
-      .localCheckpoint()
-    tok.unpersist(blocking = false)
-    out
-  }
+    * whose score is ES's default-like lift), [[sigChi2]] over the same
+    * contingency. */
+  def significantTermsChi2(docs: DataFrame, minCount: Long, k: Int): DataFrame =
+    bySource(docs, "chi2", sigChi2, minCount, k)
 
   /** ES significant_terms with the `mutual_information` heuristic
-    * (round 13 — completing the default-lift / chi_square / MI trio):
-    * MI = Σ over the four contingency cells of
-    * (n_xy/N)·log₂(n_xy·N / (n_x·n_y)), empty cells contributing 0.
-    *
-    * r14: log₂ is (DetLn(n_xy·N) − DetLn(n_x·n_y)) / Ln2 — the
-    * dual-compiled libm-free ln, split numerator-minus-denominator so
-    * both arguments stay ≥ 1 (DetLn's domain; the products are exact
-    * doubles, ≤ token-count² < 2^53). The split changes the value at
-    * the ~1e-13 level IDENTICALLY on both engines (the oracle is
-    * generated from the same program by [[significantMiOracleSql]]);
-    * the previous libm form survived on fdlibm-vs-glibc input luck,
-    * the class the multi_match probe disproved. Cells are ranked on a
-    * bounded (sources × vocab) aggregated frame, so the DetLn column
-    * chains are per-row-cheap attribute references. */
-  def significantTermsMi(docs: DataFrame, minCount: Long, k: Int): DataFrame = {
-    val tok = docs.select(col("source"),
-        explode(split(lower(col("text")), "\\s+")).as("term"))
-      .filter(col("term") =!= "")
-      .persist()
-    val bySrcTerm = tok.groupBy("source", "term").agg(count(lit(1)).as("a"))
-    val byTerm = tok.groupBy("term").agg(count(lit(1)).as("b"))
-    val bySrc = tok.groupBy("source").agg(count(lit(1)).as("c"))
-    val total = tok.agg(count(lit(1)).as("d"))
-    def d(c: Column) = c.cast("double")
-    val n = col("d")
-    // cells (count, row marginal, col marginal):
-    //   in-source∧term (a; c, b), in-source∧¬term (c−a; c, d−b),
-    //   other∧term (b−a; d−c, b), other∧¬term (d−b−c+a; d−c, d−b)
-    val cells = Seq(
-      (col("a"), col("c"), col("b")),
-      (col("c") - col("a"), col("c"), n - col("b")),
-      (col("b") - col("a"), n - col("c"), col("b")),
-      (n - col("b") - col("c") + col("a"), n - col("c"), n - col("b")))
-    val base = bySrcTerm
-      .join(byTerm, "term")
-      .join(broadcast(bySrc), "source")
-      .crossJoin(broadcast(total))
-      .filter(col("a") >= minCount)
-    // DetLn as the codegen'd kernel expression, NOT chained columns —
-    // on this data-scale frame CollapseProject merges a column chain
-    // back into one textually-substituted expression (measured 5×,
-    // the DuckDB lateral-alias blowup replayed inside Catalyst).
-    // A zero cell's numerator ln is garbage-but-unused: the mi term
-    // is `when`-guarded to 0, same as the libm form's guard.
-    val mi = cells.map { case (nxy, nx, ny) =>
-      when(nxy === 0, lit(0.0)).otherwise(
-        (d(nxy) / d(n)) *
-          ((graft.util.DetLn.lnExpr(d(nxy) * d(n)) -
-            graft.util.DetLn.lnExpr(d(nx) * d(ny))) / lit(graft.util.DetLn.Ln2)))
-    }.reduce(_ + _)
-    val out = base
-      .withColumn("mi", mi)
-      .select(col("source"), col("term"), col("a").as("n_in_source"),
-        col("b").as("n_in_corpus"), col("mi"))
-      .orderBy(col("mi").desc, col("source"), col("term"))
-      .limit(k)
-      .localCheckpoint()
-    tok.unpersist(blocking = false)
-    out
-  }
+    * (round 13 — completing the default-lift / chi_square / MI trio),
+    * [[sigMi]] over the same contingency. */
+  def significantTermsMi(docs: DataFrame, minCount: Long, k: Int): DataFrame =
+    bySource(docs, "mi", sigMi, minCount, k)
 
-  /** The DuckDB twin of [[significantTermsMi]] — generated from the
-    * same cell definitions and the same DetLn program. */
-  def significantMiOracleSql(minCount: Long, k: Int): String = {
+  /** The DuckDB `ctl` nest (the contingency row `ct` with each cell's
+    * two DetLn logs as `__lnn<j>`/`__lnd<j>`) and the MI sum over it —
+    * the textual mirror of [[sigMi]]. */
+  private def miSql: (String, String) = {
     import graft.util.DetLn
-    // (nxy, nx, ny) cell expressions over the ct columns a/b/c/d —
-    // textual mirrors of the Column cells above
     val cells = Seq(
       ("a", "c", "b"),
       ("c - a", "c", "d - b"),
@@ -928,10 +872,16 @@ object TextOps {
       DetLn.sqlItems(s"CAST($nxy AS DOUBLE) * CAST(d AS DOUBLE)", s"__lnn$j") ++
         DetLn.sqlItems(s"CAST($nx AS DOUBLE) * CAST($ny AS DOUBLE)", s"__lnd$j")
     }
-    val nest = DetLn.nestSql("ct", items)
     val mi = cells.zipWithIndex.map { case ((nxy, _, _), j) =>
       s"(CASE WHEN $nxy = 0 THEN 0.0 ELSE (CAST($nxy AS DOUBLE) / CAST(d AS DOUBLE)) * ((__lnn$j - __lnd$j) / ${DetLn.dlit(DetLn.Ln2)}) END)"
     }.mkString("\n  + ")
+    (DetLn.nestSql("ct", items), mi)
+  }
+
+  /** The DuckDB twin of [[significantTermsMi]] — generated from the
+    * same cell definitions and the same DetLn program. */
+  def significantMiOracleSql(minCount: Long, k: Int): String = {
+    val (nest, mi) = miSql
     raw"""WITH tok AS (SELECT source, term FROM (
          |        SELECT source, unnest(string_split_regex(lower(text), '\s+')) AS term
          |        FROM documents) WHERE term <> ''),
@@ -951,41 +901,10 @@ object TextOps {
   }
 
   /** ES significant_terms with the JLH heuristic (round 13 — ES's
-    * DEFAULT significance scorer): with foreground probability
-    * p_fg = a/c and background p_bg = b/d, score =
-    * (p_fg − p_bg) · (p_fg / p_bg) when the term is over-represented,
-    * 0 otherwise — the absolute-change × relative-change product that
-    * balances rare-but-exclusive against common-but-lifted terms.
-    * Pure rational double arithmetic (two divisions, one subtract, one
-    * multiply, fixed order) — no transcendentals at all, so oracle
-    * parity is exact by construction. b = 0 cannot occur (a ≥ minCount
-    * implies b ≥ a). */
-  def significantTermsJlh(docs: DataFrame, minCount: Long, k: Int): DataFrame = {
-    val tok = docs.select(col("source"),
-        explode(split(lower(col("text")), "\\s+")).as("term"))
-      .filter(col("term") =!= "")
-      .persist()
-    val bySrcTerm = tok.groupBy("source", "term").agg(count(lit(1)).as("a"))
-    val byTerm = tok.groupBy("term").agg(count(lit(1)).as("b"))
-    val bySrc = tok.groupBy("source").agg(count(lit(1)).as("c"))
-    val total = tok.agg(count(lit(1)).as("d"))
-    val pFg = col("a").cast("double") / col("c").cast("double")
-    val pBg = col("b").cast("double") / col("d").cast("double")
-    val out = bySrcTerm
-      .join(byTerm, "term")
-      .join(broadcast(bySrc), "source")
-      .crossJoin(broadcast(total))
-      .filter(col("a") >= minCount)
-      .withColumn("jlh",
-        when(pFg > pBg, (pFg - pBg) * (pFg / pBg)).otherwise(lit(0.0)))
-      .select(col("source"), col("term"), col("a").as("n_in_source"),
-        col("b").as("n_in_corpus"), col("jlh"))
-      .orderBy(col("jlh").desc, col("source"), col("term"))
-      .limit(k)
-      .localCheckpoint()
-    tok.unpersist(blocking = false)
-    out
-  }
+    * DEFAULT significance scorer), [[sigJlh]] over the same
+    * contingency. */
+  def significantTermsJlh(docs: DataFrame, minCount: Long, k: Int): DataFrame =
+    bySource(docs, "jlh", sigJlh, minCount, k)
 
   /** ES significant_terms with `background_filter` (round 15, VERDICT
     * r14 #5): the superset ("background") counts come from a SCOPED
@@ -993,92 +912,30 @@ object TextOps {
     * and the foreground is one `fgSource` bucket WITHIN that scope
     * (ES's documented usage: the query carries the background
     * predicate so fg ⊆ bg and every margin stays positive). All FOUR
-    * significance heuristics ride the one scoped contingency frame —
-    * the same (a, b, c, d) = (fg term count, bg term count, fg total,
-    * bg total) the unscoped quartet uses, so the scoring programs are
-    * shared verbatim: default lift (a·d)/(b·c); JLH
-    * (p_fg−p_bg)·(p_fg/p_bg) over-represented-else-0; chi² on the 2×2
-    * cells with double-cast-before-multiply in the oracle-mirrored
-    * parenthesization; MI via the DetLn codegen kernel (libm-free,
-    * split numerator−denominator so both ln arguments stay ≥ 1).
-    * Ranked by JLH (ES's default scorer), term tiebreak.
+    * heuristics score the one scoped contingency — the set is the
+    * source inside the `bgLang` scope, so (a, b, c, d) = (fg term
+    * count, bg term count, fg total, bg total) and the scoring Columns
+    * are the unscoped quartet's. Ranked by JLH (ES's default scorer),
+    * term tiebreak.
     *
     * Scale: tokenizing scans only the bg-filtered slice (predicate
-    * pushed to the parquet scan), the fg marginal is a 1-row
-    * broadcast, the candidate frame is (bg vocab) rows. */
+    * pushed to the parquet scan), the fg margin is a 1-row broadcast,
+    * the candidate frame is (bg vocab) rows. */
   def significantTermsBackground(docs: DataFrame, fgSource: String,
-      bgLang: String, minCount: Long, k: Int): DataFrame = {
-    val tok = docs.filter(col("lang") === bgLang)
-      .select(col("source"),
-        explode(split(lower(col("text")), "\\s+")).as("term"))
-      .filter(col("term") =!= "")
-      .persist()
-    val fg = tok.filter(col("source") === fgSource)
-    val byTermFg = fg.groupBy("term").agg(count(lit(1)).as("a"))
-    val byTermBg = tok.groupBy("term").agg(count(lit(1)).as("b"))
-    val fgTotal = fg.agg(count(lit(1)).as("c"))
-    val bgTotal = tok.agg(count(lit(1)).as("d"))
-    def d(c: Column) = c.cast("double")
-    val n = col("d")
-    val lift = (col("a") * col("d")).cast("double") / (col("b") * col("c"))
-    val pFg = col("a").cast("double") / col("c").cast("double")
-    val pBg = col("b").cast("double") / col("d").cast("double")
-    val jlh = when(pFg > pBg, (pFg - pBg) * (pFg / pBg)).otherwise(lit(0.0))
-    val bigA = col("a"); val bigB = col("c") - col("a")
-    val bigC = col("b") - col("a"); val bigD = n - col("b") - col("c") + col("a")
-    val x = d(bigA) * d(bigD) - d(bigB) * d(bigC)
-    val denom = (d(bigA + bigB) * d(bigA + bigC)) *
-      (d(bigB + bigD) * d(bigC + bigD))
-    val chi2 = when(denom === 0.0, lit(null).cast("double"))
-      .otherwise(d(col("d")) * (x * x) / denom)
-    val cells = Seq(
-      (col("a"), col("c"), col("b")),
-      (col("c") - col("a"), col("c"), n - col("b")),
-      (col("b") - col("a"), n - col("c"), col("b")),
-      (n - col("b") - col("c") + col("a"), n - col("c"), n - col("b")))
-    val mi = cells.map { case (nxy, nx, ny) =>
-      when(nxy === 0, lit(0.0)).otherwise(
-        (d(nxy) / d(n)) *
-          ((graft.util.DetLn.lnExpr(d(nxy) * d(n)) -
-            graft.util.DetLn.lnExpr(d(nx) * d(ny))) / lit(graft.util.DetLn.Ln2)))
-    }.reduce(_ + _)
-    val out = byTermFg
-      .join(byTermBg, "term")
-      .crossJoin(broadcast(fgTotal))
-      .crossJoin(broadcast(bgTotal))
-      .filter(col("a") >= minCount)
-      .withColumn("lift", lift)
-      .withColumn("jlh", jlh)
-      .withColumn("chi2", chi2)
-      .withColumn("mi", mi)
+      bgLang: String, minCount: Long, k: Int): DataFrame =
+    contingency(sourceTokens(docs.filter(col("lang") === bgLang)), "source")
+      .filter(col("source") === fgSource && col("a") >= minCount)
       .select(col("term"), col("a").as("n_fg"), col("b").as("n_bg"),
-        col("lift"), col("jlh"), col("chi2"), col("mi"))
+        sigLift.as("lift"), sigJlh.as("jlh"), sigChi2.as("chi2"), sigMi.as("mi"))
       .orderBy(col("jlh").desc, col("term"))
       .limit(k)
-      .localCheckpoint()
-    tok.unpersist(blocking = false)
-    out
-  }
 
   /** The DuckDB twin of [[significantTermsBackground]] — generated from
     * the same cell definitions and the same DetLn program (the
     * significantMiOracleSql pattern, with the scoped token CTEs). */
   def significantBgOracleSql(fgSource: String, bgLang: String,
       minCount: Long, k: Int): String = {
-    import graft.util.DetLn
-    val cells = Seq(
-      ("a", "c", "b"),
-      ("c - a", "c", "d - b"),
-      ("b - a", "d - c", "b"),
-      ("d - b - c + a", "d - c", "d - b"))
-    val items = cells.zipWithIndex.flatMap { case ((nxy, nx, ny), j) =>
-      DetLn.sqlItems(s"CAST($nxy AS DOUBLE) * CAST(d AS DOUBLE)", s"__lnn$j") ++
-        DetLn.sqlItems(s"CAST($nx AS DOUBLE) * CAST($ny AS DOUBLE)", s"__lnd$j")
-    }
-    val nest = DetLn.nestSql("ct", items)
-    val mi = cells.zipWithIndex.map { case ((nxy, _, _), j) =>
-      s"(CASE WHEN $nxy = 0 THEN 0.0 ELSE (CAST($nxy AS DOUBLE) / CAST(d AS DOUBLE)) * ((__lnn$j - __lnd$j) / ${DetLn.dlit(DetLn.Ln2)}) END)"
-    }.mkString("\n  + ")
+    val (nest, mi) = miSql
     raw"""WITH tok AS (SELECT source, term FROM (
          |        SELECT source, unnest(string_split_regex(lower(text), '\s+')) AS term
          |        FROM documents WHERE lang = '$bgLang') WHERE term <> ''),
@@ -1110,37 +967,33 @@ object TextOps {
     * the hit set, b = in the corpus, c/d = the respective token totals —
     * integer products, one double division, deterministic top-k.
     *
-    * Scale: one tokenize pass persisted across its three uses; the hit
-    * doc-id set is reduced via a semi-join on the slim (doc_id, term)
-    * rows; the corpus-total frames are 1-row broadcasts. ES samples the
-    * hit set for the same boundedness — compose with [[graft.operators
-    * .Analytics.samplerAgg]]'s hash-band form if the query matches a
-    * large corpus fraction. */
+    * A doc_id is a hit when any of its rows holds `queryTerm` as a
+    * token, so every row of that doc_id is foreground; a null doc_id
+    * and an empty `queryTerm` hit nothing.
+    *
+    * Scale: one shuffle of the documents by doc_id marks each row with
+    * its doc_id's hit flag (a window, which no predicate crosses, so
+    * every contingency branch reuses that exchange and the corpus is
+    * read once); the corpus-total frames are 1-row broadcasts. ES
+    * samples the hit set for the same boundedness — compose with
+    * [[graft.operators.Analytics.samplerAgg]]'s hash-band form if the
+    * query matches a large corpus fraction. */
   def significantText(docs: DataFrame, queryTerm: String, minCount: Long,
                       k: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val toks = split(lower(col("text")), "\\s+")
+    val holds = if (queryTerm.isEmpty) lit(false) else array_contains(toks, queryTerm)
     val tok = docs
-      .select(col("doc_id"), explode(split(lower(col("text")), "\\s+")).as("term"))
+      .select(col("text"), (col("doc_id").isNotNull &&
+        max(holds).over(Window.partitionBy("doc_id"))).as("hit"))
+      .select(col("hit"), explode(toks).as("term"))
       .filter(col("term") =!= "")
-      .persist()
-    val hitIds = tok.filter(col("term") === queryTerm).select("doc_id").distinct()
-    val fgTok = tok.join(hitIds, Seq("doc_id"), "left_semi")
-    val a = fgTok.groupBy("term").agg(count(lit(1)).as("a"))
-    val b = tok.groupBy("term").agg(count(lit(1)).as("b"))
-    val c = fgTok.agg(count(lit(1)).as("c"))
-    val d = tok.agg(count(lit(1)).as("d"))
-    // bounded result materialized eagerly; tokenize cache dropped
-    val out = a.join(b, "term")
-      .crossJoin(broadcast(c))
-      .crossJoin(broadcast(d))
-      .filter(col("a") >= minCount)
-      .withColumn("lift", (col("a") * col("d")).cast("double") / (col("b") * col("c")))
+    contingency(tok, "hit")
+      .filter(col("hit") && col("a") >= minCount)
       .select(col("term"), col("a").as("n_in_hits"), col("b").as("n_in_corpus"),
-        col("lift"))
+        sigLift.as("lift"))
       .orderBy(col("lift").desc, col("term"))
       .limit(k)
-      .localCheckpoint()
-    tok.unpersist(blocking = false)
-    out
   }
 
   /** ES prefix query: docs with ≥1 token starting with `prefix`, scored
@@ -1672,38 +1525,12 @@ object TextOps {
     val withFields = docs.select(col("doc_id"),
       slice(toks, 1, titleLen).as("tt"),
       slice(toks, titleLen + 1, Int.MaxValue - titleLen).as("bt"))
-    def tfIn(f: String, t: String) =
-      size(filter(col(f), x => x === lit(t))).cast("long")
-    val perDoc = withFields.select(col("doc_id") +:
-        (lit(wTitle) * size(col("tt")) + lit(wBody) * size(col("bt")))
-          .cast("long").as("dl") +:
-        terms.zipWithIndex.map { case (t, i) =>
-          (lit(wTitle) * tfIn("tt", t) + lit(wBody) * tfIn("bt", t))
-            .cast("long").as(s"tf$i") }: _*)
-      .persist()
-    val stats0 = perDoc.agg(
-      count(lit(1)).as("n_docs"),
-      sum(col("dl")).as("total_toks") +: terms.indices.map(i =>
-        sum(when(col(s"tf$i") > 0, 1L).otherwise(0L)).as(s"df$i")): _*)
-    // DetLn idf on the 1-row stats frame (r14 — see bm25Search)
-    val stats = terms.indices.foldLeft(stats0) { (df0, i) =>
-      df0.withColumn(s"idf$i", graft.util.DetLn.lnExpr((lit(1) +
-        (col("n_docs") - col(s"df$i") + lit(0.5)) / (col(s"df$i") + lit(0.5)))
-        .cast("double")))
-    }
-    val avgdl = col("total_toks").cast("double") / col("n_docs")
-    val score = terms.indices.map { i =>
-      col(s"idf$i") * (col(s"tf$i") * lit(k1 + 1)) /
-        (col(s"tf$i") + lit(k1) * (lit(1 - b) + lit(b) * (col("dl") / avgdl)))
-    }.reduce(_ + _)
-    val out = perDoc.crossJoin(broadcast(stats))
-      .filter(terms.indices.map(i => col(s"tf$i") > 0).reduce(_ || _))
-      .select(col("doc_id"), col("dl"), score.as("score"))
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(kTop)
-      .localCheckpoint()
-    perDoc.unpersist(blocking = false)
-    out
+    val (tt, bt) = (tokenField("", col("tt")), tokenField("", col("bt")))
+    val f = Bm25Field("", (lit(wTitle) * size(col("tt")) + lit(wBody) * size(col("bt")))
+      .cast("long"), t => (lit(wTitle) * tt.tf(t) + lit(wBody) * bt.tf(t)).cast("long"))
+    val m = new Bm25(withFields, Seq(f), terms, k1, b)
+    m.page(m.stats(m.idfs(f)),
+      Seq(col("doc_id"), col("dl"), m.fieldScore(f).as("score")), kTop)
   }
 
   /** ES 8.16 `linear` retriever: weighted fusion of the BM25 lexical
@@ -1747,6 +1574,25 @@ object TextOps {
       .select("doc_id", "lex_norm", "sem_norm", "fused")
   }
 
+  /** The judged BM25 page both `_rank_eval` metrics read: the top-`n`
+    * [[bm25Search]] page with each doc's 1-based `rank` and its
+    * judgment `rel` (it holds every query term), and the 1-row
+    * corpus-wide `n_relevant`. */
+  private def judgedPage(docs: DataFrame, terms: Seq[String],
+      n: Int): (DataFrame, DataFrame) = {
+    import org.apache.spark.sql.expressions.Window
+    require(terms.nonEmpty && n >= 10)
+    val toks = split(lower(col("text")), "\\s+")
+    val relevant = terms.map(t =>
+      size(filter(toks, x => x === lit(t))) > 0).reduce(_ && _)
+    val judged = docs.select(col("doc_id"), relevant.as("rel"))
+    val page = bm25Search(docs, terms, n)
+      .withColumn("rank",
+        row_number().over(Window.orderBy(col("score").desc, col("doc_id"))))
+      .join(judged, "doc_id")
+    (page, judged.agg(sum(when(col("rel"), 1L).otherwise(0L)).as("n_relevant")))
+  }
+
   /** ES _rank_eval API: search-quality metrics for a ranking against a
     * judgment set — precision@5/@10, recall@n, and MRR, the eval loop a
     * relevance-tuning pipeline runs after every change. The ranking is
@@ -1759,17 +1605,7 @@ object TextOps {
     * count is one 1-row aggregate — nothing beyond the BM25 pass
     * touches data scale. */
   def rankEval(docs: DataFrame, terms: Seq[String], n: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(terms.nonEmpty && n >= 10)
-    val toks = split(lower(col("text")), "\\s+")
-    val relevant = terms.map(t =>
-      size(filter(toks, x => x === lit(t))) > 0).reduce(_ && _)
-    val judged = docs.select(col("doc_id"), relevant.as("rel"))
-    val page = bm25Search(docs, terms, n)
-      .withColumn("rank",
-        row_number().over(Window.orderBy(col("score").desc, col("doc_id"))))
-      .join(judged, "doc_id")
-    val totals = judged.agg(sum(when(col("rel"), 1L).otherwise(0L)).as("n_relevant"))
+    val (page, totals) = judgedPage(docs, terms, n)
     page
       .agg(
         sum(when(col("rel") && col("rank") <= 5, 1L).otherwise(0L)).as("hits5"),
@@ -1812,17 +1648,7 @@ object TextOps {
     * shape identical to [[rankEval]]: everything beyond the BM25 pass
     * is rank-bounded. */
   def rankEvalDcg(docs: DataFrame, terms: Seq[String], n: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(terms.nonEmpty && n >= 10)
-    val toks = split(lower(col("text")), "\\s+")
-    val relevant = terms.map(t =>
-      size(filter(toks, x => x === lit(t))) > 0).reduce(_ && _)
-    val judged = docs.select(col("doc_id"), relevant.as("rel"))
-    val page = bm25Search(docs, terms, n)
-      .withColumn("rank",
-        row_number().over(Window.orderBy(col("score").desc, col("doc_id"))))
-      .join(judged, "doc_id")
-    val totals = judged.agg(sum(when(col("rel"), 1L).otherwise(0L)).as("n_relevant"))
+    val (page, totals) = judgedPage(docs, terms, n)
     val contribs = (1 to 10).map { r =>
       coalesce(max(when(col("rank") === r && col("rel"),
         lit(dcgDiscounts(r - 1))).otherwise(lit(0.0))), lit(0.0)).as(s"c$r")

@@ -16,7 +16,7 @@ class RegistrySpec extends AnyFunSuite {
 
   test("oracle_sql.json keeps its pinned bytes") {
     assert(sha256(Verify.oracleJson) ==
-      "65aadba8f507953a0b679c232c32971b059887f406ec1f1e507ee9514004dd1d")
+      "9f22207b91a8b5afc8cd9fc182f365a455714158ca4849e5e82f4b18e14d739a")
   }
 
   test("301 queries with unique names: 284 with an oracle, 17 rows-only") {

@@ -2,13 +2,13 @@ package graft
 
 import graft.text.TextOps
 
-/** Persist hygiene for the multi-use text operators: every operator
-  * that persists a stage intermediate (tokenize pass, tf table, vocab)
-  * must drop it before returning — the result pages are bounded and
-  * eagerly materialized (localCheckpoint, the manifest pattern), so a
-  * long-lived library session accumulates nothing. The check inspects
-  * the session cacheManager directly: after running every persisting
-  * text operator, zero cached plans remain. */
+/** Persist hygiene for the text operators: no operator leaves a cached
+  * plan behind, so a long-lived library session accumulates nothing.
+  * The BM25 and significant-terms operators cache nothing (their plans
+  * run in the caller's action); phraseSuggest and moreLikeThis persist
+  * a stage intermediate and drop it once their bounded page is
+  * checkpointed. The check inspects the session cacheManager directly:
+  * after running each operator, zero cached plans remain. */
 class TextHygieneSpec extends SparkSpec {
 
   test("text operators leave no cached plans behind") {
