@@ -335,21 +335,19 @@ object TextOps {
     require(terms.nonEmpty)
     val f = tokenField("", split(lower(col("text")), "\\s+"))
     val m = new Bm25(docs, Seq(f), terms, k1, b)
-    val page = m.page(m.stats(m.idfs(f)),
-      col("doc_id") +: col("dl") +: m.fieldScore(f).as("score") +:
-      terms.indices.flatMap(i => Seq(
-        f.tfCol(i), f.dfCol(i), col(s"idf$i"),
-        m.tfPart(f, i).as(s"tf_part$i"),
-        m.weight(col(s"idf$i"), f, i).as(s"w$i"))), kTop)
-    // page-sized per-term expansion: one select per term, unioned —
-    // kTop × |terms| rows, matched terms only (the ES explain shape)
-    terms.zipWithIndex.map { case (t, i) =>
-      page.filter(col(s"tf$i") > 0).select(
-        col("doc_id"), lit(t).as("term"), col("dl"),
-        col(s"tf$i").as("tf"), col(s"df$i").as("df"),
-        col(s"idf$i").as("idf"), col(s"tf_part$i").as("tf_part"),
-        col(s"w$i").as("weight"), col("score"))
-    }.reduce(_.unionByName(_))
+    val page = m.page(m.stats(m.idfs(f)), Seq(col("doc_id"), col("dl"),
+      m.fieldScore(f).as("score"), array(terms.zipWithIndex.map { case (t, i) =>
+        struct(lit(t).as("term"), f.tfCol(i).as("tf"), f.dfCol(i).as("df"),
+          col(s"idf$i").as("idf"), m.tfPart(f, i).as("tf_part"),
+          m.weight(col(s"idf$i"), f, i).as("weight"))
+      }: _*).as("terms")), kTop)
+    // page-sized per-term expansion: kTop × |terms| rows, matched terms
+    // only (the ES explain shape), from the one page plan
+    page.select(col("doc_id"), col("dl"), col("score"), explode(col("terms")).as("t"))
+      .filter(col("t.tf") > 0)
+      .select(col("doc_id"), col("t.term").as("term"), col("dl"),
+        col("t.tf").as("tf"), col("t.df").as("df"), col("t.idf").as("idf"),
+        col("t.tf_part").as("tf_part"), col("t.weight").as("weight"), col("score"))
   }
 
   /** ES terms aggregation SHARD APPROXIMATION CONTRACT (round 13):
